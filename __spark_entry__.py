@@ -691,7 +691,7 @@ def q_string_hash_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_media_features_by_kind(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing over driver data: documents → opaque binary media
-    column (utf-8 bytes, kind = doc_id % 3) → Arrow mapInPandas feature
+    column (utf-8 bytes, kind = doc_id % 3) → Arrow mapInArrow feature
     extraction → per-kind stats.  Oracle-checked (r2): the extractor's
     n_bytes and md5 content_hash are recomputable in DuckDB from the same
     text, so the oracle verifies the binary column round-trips the Arrow
@@ -707,7 +707,7 @@ def q_media_features_by_kind(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("kind"),
         F.encode(F.col("text"), "UTF-8").alias("bytes"),
     )
-    feats = M.extract_media_features(media, dim=16)
+    feats = M.extract_media_features(media)
     return (
         feats.groupBy("kind")
         .agg(

@@ -28,7 +28,7 @@ import zlib
 import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, IntegerType, LongType, StringType
+from pyspark.sql.types import ArrayType, IntegerType, StringType
 
 _MERSENNE_P = (1 << 31) - 1
 _SEED = 42
@@ -210,57 +210,20 @@ def _sigs_batched(
     return out
 
 
-def make_sig_shingle_udf(num_hashes: int = 64, k: int = 3):
-    """Arrow pandas UDF: string column → struct(sig array<int>, sh
-    array<int>) — MinHash signature AND the sorted distinct shingle-hash
-    set from ONE pass over the text.  The LSH operators need both (bands
-    from sig, exact verify from sh); computing them in separate UDFs
-    shingled every document twice and scanned the text column twice.
-    Column values are numerically identical to make_minhash_udf /
-    make_shingle_udf (same shingle_set, same batch kernel); both arrays are
-    int32 because every element is a value mod p = 2³¹−1 (sentinel −1) —
-    see make_minhash_udf.  The sh arrays are the verify stage's dominant
-    per-pair payload, so the narrowing halves the bytes that cross the
-    pair-assembly joins and the Arrow intersect kernel's boundary."""
-    from pyspark.sql.types import StructField, StructType
-
-    a, b = _coeffs(num_hashes)
-    ret = StructType(
-        [
-            StructField("sig", ArrayType(IntegerType())),
-            StructField("sh", ArrayType(IntegerType())),
-        ]
-    )
-
-    @pandas_udf(ret)
-    def sig_shingle_udf(texts: pd.Series) -> pd.DataFrame:
-        sets = [
-            shingle_set(t, k) if t else np.empty(0, dtype=np.uint64)
-            for t in texts
-        ]
-        return pd.DataFrame(
-            {
-                "sig": _sigs_batched(sets, a, b, num_hashes),
-                # exact: shingle values are mod p = 2³¹−1 < int32 max
-                "sh": [s.astype(np.int32).tolist() for s in sets],
-            }
-        )
-
-    return sig_shingle_udf
-
-
 def make_sig_shingle_band_udf(num_hashes: int = 64, k: int = 3, bands: int = 16):
     """Arrow pandas UDF: string column → struct(sig array<int>, sh
     array<int>, keys array<string>) — signature, sorted distinct
     shingle-hash set AND the LSH band keys, all from ONE pass over the
     text.  Emitting the keys here removes the separate band-key Python
     stage the LSH operators otherwise run over the sig column (a whole
-    extra Arrow round-trip per corpus side at crawl-snapshot latencies).
-    Values are numerically identical to make_sig_shingle_udf +
+    extra Arrow round-trip per corpus side at crawl-snapshot latencies),
+    and computing sig and sh together shingles every document once.
+    Values are numerically identical to make_minhash_udf +
     make_band_keys_udf composed (same kernels; the band keys are computed
     HERE from the int64 numpy signatures, before the int32 column cast, so
-    they are byte-identical to the long-typed era).  int32 arrays: see
-    make_minhash_udf / make_sig_shingle_udf."""
+    they are byte-identical to the long-typed era).  int32 arrays (every
+    element is a value mod p = 2³¹−1, sentinel −1): see make_minhash_udf;
+    the sh arrays are the verify stage's dominant per-pair payload."""
     from pyspark.sql.types import StructField, StructType
 
     a, b = _coeffs(num_hashes)
@@ -335,25 +298,6 @@ def sorted_intersect_size(a: np.ndarray, b: np.ndarray) -> int:
     idx = np.searchsorted(b, a)
     idx[idx == len(b)] = 0
     return int(np.count_nonzero(b[idx] == a))
-
-
-def make_shingle_udf(k: int = 3):
-    """Arrow pandas UDF: string column → sorted array<long> of distinct
-    polynomial-rolling-hash shingle values over k-BYTE windows of the
-    lowercased space-padded UTF-8 text (shingle_set — the exact sets
-    `jaccard` compares; windows are bytes, not chars, for non-ASCII text).
-    Emitting the sets as a column lets the LSH verify stage intersect
-    precomputed arrays instead of re-shingling both texts once per candidate
-    pair — each document is shingled once, not once per pair it participates
-    in."""
-
-    @pandas_udf(ArrayType(LongType()))
-    def shingle_udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [shingle_set(t or "", k).astype(np.int64).tolist() for t in texts]
-        )
-
-    return shingle_udf
 
 
 def make_band_keys_udf(bands: int):

@@ -248,23 +248,6 @@ def _minhash_feats(
     return out.localCheckpoint(eager=True)
 
 
-def _feats_broadcastable(
-    feats: DataFrame, num_hashes: int, bands: int, budget_mb: int
-) -> bool:
-    """One tiny agg job over the persisted feature table → conservative
-    broadcast size estimate.  Per row: 8 B/signature slot, 8 B/shingle,
-    ~96 B id + struct overhead, plus the exploded band table (~50 B/key ×
-    bands); ×2 for the JVM hash-relation overhead.  The agg materializes
-    the persist — work the plan pays anyway."""
-    if budget_mb <= 0:
-        return False
-    row = feats.agg(
-        F.count("*").alias("n"), F.coalesce(F.sum("ss"), F.lit(0)).alias("sh")
-    ).first()
-    est = 2 * (row["n"] * (8 * num_hashes + 96 + 50 * bands) + 8 * row["sh"])
-    return est <= budget_mb * (1 << 20)
-
-
 def _est_floor(threshold: float, num_hashes: int) -> float:
     return max(
         threshold - 3.0 * (threshold * (1.0 - threshold) / num_hashes) ** 0.5, 0.0
@@ -277,11 +260,13 @@ def _exact_jaccard(sur: DataFrame, threshold: float) -> DataFrame:
     kernel (make_intersect_size_udf — the interpreted JVM array_intersect
     costs ~45 µs/pair and the division filter evaluates it twice), then the
     SAME double-division + 6dp rounding boundary as the SQL oracle.  The
-    filter references the kernel's output column, so Catalyst cannot push
-    it below the Arrow stage — the kernel runs exactly once per pair."""
+    kernel is marked nondeterministic so Catalyst cannot inline its alias
+    into both the filter and the final projection (a deterministic UDF
+    there compiles to two ArrowEvalPython nodes, every survivor crossing
+    the Arrow boundary twice) — the kernel runs exactly once per pair."""
     from ..functions.minhash import make_intersect_size_udf
 
-    isz = make_intersect_size_udf()
+    isz = make_intersect_size_udf().asNondeterministic()
     c = F.col("c").cast("double")
     jac = c / (F.col("ls") + F.col("rs") - c)
     return (
@@ -293,44 +278,54 @@ def _exact_jaccard(sur: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def _fused_verify(
-    cands: DataFrame,
-    lfeats: DataFrame,
-    rfeats: DataFrame,
-    num_hashes: int,
-    threshold: float,
-    broadcast_right: bool,
+def _verified_pairs(
+    lfeats: DataFrame, rfeats: DataFrame, num_hashes: int, threshold: float
 ) -> DataFrame:
-    """Pair assembly + estimate gate + exact verify in ONE stage: candidates
-    join the left feature table (sig AND shingles together — one shuffle,
-    not the tiered two), the right side arrives map-side as a broadcast
-    when `broadcast_right`, and the filters run est-before-intersect
-    (Catalyst's CombineFilters keeps conjunct order, so the cheap 64-slot
-    signature fold runs before the exact intersect, which only gate
-    survivors reach).  Values identical to the tiered path: same floor,
-    same Jaccard, same rounding."""
-    lfull = lfeats.select(
-        F.col("id").alias("left_id"),
-        F.col("sig").alias("lsig"),
-        F.col("sh").alias("lsh"),
-        F.col("ss").alias("ls"),
+    """(left_id, right_id, jaccard ≥ threshold) from two `_minhash_feats`
+    tables — ids-only band join → signature-estimate gate → shingle attach
+    → exact verify.  Passing the SAME table twice is the self-join (pairs
+    with left_id < right_id); two tables give the cross pairs."""
+    l = lfeats.select("id", F.explode("keys").alias("key")).alias("l")
+    r = rfeats.select("id", F.explode("keys").alias("key")).alias("r")
+    joined = l.join(r, "key")
+    if lfeats is rfeats:
+        joined = joined.where(F.col("l.id") < F.col("r.id"))
+    # The pair-dedup exchange is width-pinned (repartition on the
+    # pair key, which dropDuplicates' clustering requirement then reuses —
+    # no extra shuffle): the estimate-gate fold and the exact-verify kernel
+    # downstream are pipelined onto THIS exchange's output with no further
+    # shuffle, and their cost is per-ROW compute (~µs/pair), invisible to
+    # AQE's byte-based coalescing, which was observed squeezing the whole
+    # gate+verify chain onto 3 of 32 cores at bench scale (8 MB of slim
+    # pair rows).  Same rule as the feature battery's explicit repartition
+    # before its Python stage (features.py): UDF cost/row >> bytes/row.
+    # The width is a FLOOR, never a cap (_pair_dedup_width): the pin
+    # defeats byte-based coalescing without undercutting the configured
+    # reduce width at scale; the lost map-side partial dedup costs only
+    # the band-duplicate factor in shuffle bytes (measured 1.03x at
+    # sf0.1; bounded by the band count).
+    cands = (
+        joined.select(
+            F.col("l.id").alias("left_id"), F.col("r.id").alias("right_id")
+        )
+        .repartition(
+            _pair_dedup_width(lfeats.sparkSession), "left_id", "right_id"
+        )
+        .dropDuplicates()
     )
-    rfull = rfeats.select(
-        F.col("id").alias("right_id"),
-        F.col("sig").alias("rsig"),
-        F.col("sh").alias("rsh"),
-        F.col("ss").alias("rs"),
-    )
-    if broadcast_right:
-        rfull = F.broadcast(rfull)
     eq = F.zip_with("lsig", "rsig", lambda a, b: (a == b).cast("int"))
     est = F.aggregate(eq, F.lit(0), lambda acc, x: acc + x) / F.lit(num_hashes)
-    sur = (
-        cands.join(lfull, "left_id")
-        .join(rfull, "right_id")
+    pre = (
+        cands.join(lfeats.select("id", "sig").toDF("left_id", "lsig"), "left_id")
+        .join(rfeats.select("id", "sig").toDF("right_id", "rsig"), "right_id")
         .where(est >= _est_floor(threshold, num_hashes))
+        .select("left_id", "right_id")
     )
-    return _exact_jaccard(sur, threshold)
+    j = pre.join(
+        lfeats.select("id", "sh", "ss").toDF("left_id", "lsh", "ls"), "left_id"
+    ).join(rfeats.select("id", "sh", "ss").toDF("right_id", "rsh", "rs"), "right_id")
+    # unrounded threshold, rounded output — same boundary as the oracle
+    return _exact_jaccard(j, threshold)
 
 
 def minhash_lsh_pairs(
@@ -341,7 +336,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     shingle_k: int = MINHASH_SHINGLE_K,
     threshold: float = 0.5,
-    broadcast_budget_mb: int = 0,
 ) -> DataFrame:
     """Sub-quadratic near-dup pairs, three-tier (generate → estimate → verify):
 
@@ -363,89 +357,28 @@ def minhash_lsh_pairs(
        |A∩B| / (|A|+|B|−|A∩B|) — one Arrow sorted-merge intersect kernel
        (make_intersect_size_udf), no second pass over the text.
 
-    Cache ownership: the per-doc feature table (signature + shingle set,
-    ONE text pass — make_sig_shingle_udf) is persisted for the duration of
-    THIS plan; it feeds the banding explode, the estimate prefilter, AND
-    the exact-verify arrays, so no document is scanned or shingled twice.
-    Long-lived sessions that invoke dedup operators in a loop should
-    `spark.catalog.clearCache()` between invocations (bench.py does) —
-    Spark's CacheManager holds cached plans until explicitly dropped.
+    Cache ownership: the per-doc feature table (signature, shingle set and
+    band keys, ONE text pass — make_sig_shingle_band_udf) is materialized
+    for the duration of THIS plan; it feeds the banding explode, the
+    estimate prefilter, AND the exact-verify arrays, so no document is
+    scanned or shingled twice.
 
-    Broadcast cutover (default OFF for the self-join): when the whole
-    feature table fits `broadcast_budget_mb`, the band self-join and the
-    pair assembly run map-side against a broadcast.  Measured at sf0.1
-    (5000 docs, 414k band candidates): the SELF-join is CPU-bound in the
-    estimate gate + exact intersect, not exchange-bound, so the broadcast
-    build is pure overhead (5.7 s vs 4.1 s steady) — hence default 0 here,
-    while the CROSS variant (small candidate volumes, latency-bound)
-    defaults it ON.  Two measured negatives pinned the current shape: an
+    Measured negatives that pinned this shape: broadcasting the feature
+    table for the band join and pair assembly is slower at sf0.1 (5000
+    docs, 414k band candidates: 5.7 s vs 4.1 s steady — the self-join is
+    CPU-bound in the gate and the exact intersect, not exchange-bound); an
     explicit 64-term GetArrayItem sum for the estimate is 4x SLOWER than
     the zip_with/aggregate fold (18.8 s vs 4.8 s — per-item bounds checks
-    break the fold's single pass), and broadcasting both verify sides
-    matches shuffle cost exactly (4.98 vs 4.83 s) because the verify is
-    compute-, not byte-, dominated at this shape.  A third A-B (r4): an
-    Arrow numpy kernel for the estimate gate ((L==R).sum over stacked
-    signatures) measures 0.59-0.63 s vs the JVM fold's 0.51-0.81 s steady
-    — a wash, so the fold stays (no Python workers on this path, and the
-    constant Arrow cost would only grow with signature width).
+    break the fold's single pass); broadcasting both verify sides matches
+    shuffle cost exactly (4.98 vs 4.83 s) because the verify is compute-,
+    not byte-, dominated at this shape; and an Arrow numpy kernel for the
+    estimate gate ((L==R).sum over stacked signatures) measures 0.59-0.63 s
+    vs the JVM fold's 0.51-0.81 s steady — a wash, so the fold stays (no
+    Python workers on this path, and the constant Arrow cost would only
+    grow with signature width).
     """
     feats = _minhash_feats(docs, id_col, text_col, num_hashes, shingle_k, bands)
-    bids = feats.select("id", F.explode("keys").alias("key"))
-
-    if _feats_broadcastable(feats, num_hashes, bands, broadcast_budget_mb):
-        cands = (
-            bids.toDF("left_id", "key")
-            .join(F.broadcast(bids.toDF("right_id", "key")), "key")
-            .where(F.col("left_id") < F.col("right_id"))
-            .select("left_id", "right_id")
-            .repartition(_pair_dedup_width(docs.sparkSession), "left_id", "right_id")
-            .dropDuplicates()
-        )
-        return _fused_verify(
-            cands, feats, feats, num_hashes, threshold, broadcast_right=True
-        )
-
-    l = bids.alias("l")
-    r = bids.alias("r")
-    # The pair-dedup exchange is width-pinned (repartition on the
-    # pair key, which dropDuplicates' clustering requirement then reuses —
-    # no extra shuffle): the estimate-gate fold and the exact-verify kernel
-    # downstream are pipelined onto THIS exchange's output with no further
-    # shuffle, and their cost is per-ROW compute (~µs/pair), invisible to
-    # AQE's byte-based coalescing, which was observed squeezing the whole
-    # gate+verify chain onto 3 of 32 cores at bench scale (8 MB of slim
-    # pair rows).  Same rule as the feature battery's explicit repartition
-    # before its Python stage (features.py): UDF cost/row >> bytes/row.
-    # The width is a FLOOR, never a cap (_pair_dedup_width): the pin
-    # defeats byte-based coalescing without undercutting the configured
-    # reduce width at scale; the lost map-side partial dedup costs only
-    # the band-duplicate factor in shuffle bytes (measured 1.03x at
-    # sf0.1; bounded by the band count).
-    cands = (
-        l.join(r, "key")
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("left_id"), F.col("r.id").alias("right_id"))
-        .repartition(
-            _pair_dedup_width(docs.sparkSession), "left_id", "right_id"
-        )
-        .dropDuplicates()
-    )
-    sigs = feats.select("id", "sig")
-    eq = F.zip_with("lsig", "rsig", lambda a, b: (a == b).cast("int"))
-    est = F.aggregate(eq, F.lit(0), lambda acc, x: acc + x) / F.lit(num_hashes)
-    pre = (
-        cands.join(sigs.toDF("left_id", "lsig"), "left_id")
-        .join(sigs.toDF("right_id", "rsig"), "right_id")
-        .where(est >= _est_floor(threshold, num_hashes))
-        .select("left_id", "right_id")
-    )
-
-    arrs = feats.select("id", "sh", "ss")
-    j = pre.join(arrs.toDF("left_id", "lsh", "ls"), "left_id").join(
-        arrs.toDF("right_id", "rsh", "rs"), "right_id"
-    )
-    # unrounded threshold, rounded output — same boundary as the oracle
-    return _exact_jaccard(j, threshold)
+    return _verified_pairs(feats, feats, num_hashes, threshold)
 
 
 # -------------------------------------------------------------------- SimHash
@@ -849,96 +782,6 @@ def incremental_dedup(
     )
 
 
-def minhash_lsh_pairs_cross(
-    left_docs: DataFrame,
-    right_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = MINHASH_SHINGLE_K,
-    threshold: float = 0.5,
-    broadcast_budget_mb: int = 256,
-) -> DataFrame:
-    """minhash_lsh_pairs between TWO corpora (left x right, never left x
-    left): the incremental-crawl form of near-dup detection — band keys
-    from both sides meet in one equi-join, so only cross-table band
-    collisions are ever materialized.  Same three tiers as the self-join
-    variant (band block-join ids-only → signature-estimate prefilter →
-    exact sorted-merge verify) and the same banding recall guarantee at
-    `threshold`.  Returns (left_id, right_id, jaccard) with jaccard >=
-    threshold.
-
-    Broadcast cutover: the RIGHT (corpus/prior-snapshot) side is the
-    natural broadcast candidate — when its whole feature table fits
-    `broadcast_budget_mb` (one agg over the persist decides), the band
-    join and the verify both run map-side and the plan's only exchanges
-    are the ids-only candidate dedup plus one join back to the new side's
-    features.  Over budget (the 10^12-doc corpus), the tiered ids-only
-    shuffle shape is the fallback; 0 disables the probe.
-
-    At 10^12-doc scale the right side's signatures, band keys and shingle
-    arrays are computed once per snapshot and PERSISTED as tables keyed by
-    band — each new crawl recomputes only its own side and joins against
-    the stored bands; this function recomputes both sides, which is the
-    right shape for the sandbox's in-memory fixtures and keeps the
-    operator self-contained."""
-    lfeats = _minhash_feats(left_docs, id_col, text_col, num_hashes, shingle_k, bands)
-    rfeats = _minhash_feats(right_docs, id_col, text_col, num_hashes, shingle_k, bands)
-
-    if _feats_broadcastable(rfeats, num_hashes, bands, broadcast_budget_mb):
-        lbids = lfeats.select("id", F.explode("keys").alias("key"))
-        rbids = rfeats.select("id", F.explode("keys").alias("key"))
-        # width-pinned pair-dedup exchange: the fused gate+verify pipelines
-        # onto it and is compute-bound per row (see minhash_lsh_pairs)
-        cands = (
-            lbids.toDF("left_id", "key")
-            .join(F.broadcast(rbids.toDF("right_id", "key")), "key")
-            .select("left_id", "right_id")
-            .repartition(
-                _pair_dedup_width(lfeats.sparkSession), "left_id", "right_id"
-            )
-            .dropDuplicates()
-        )
-        return _fused_verify(
-            cands, lfeats, rfeats, num_hashes, threshold, broadcast_right=True
-        )
-    return _cross_pairs_tiered(lfeats, rfeats, num_hashes, threshold)
-
-
-def _cross_pairs_tiered(
-    lfeats: DataFrame, rfeats: DataFrame, num_hashes: int, threshold: float
-) -> DataFrame:
-    """Tiered (ids-only band join → signature-estimate gate → sorted-merge
-    exact verify) cross pairs from prebuilt feature tables — the
-    bytes-optimal 10^12-doc shuffle shape shared by the pair operator and
-    the flagging operator's over-budget fallback."""
-    lbids = lfeats.select("id", F.explode("keys").alias("key"))
-    rbids = rfeats.select("id", F.explode("keys").alias("key"))
-    # width-pinned pair-dedup exchange — see minhash_lsh_pairs
-    cands = (
-        lbids.toDF("left_id", "key")
-        .join(rbids.toDF("right_id", "key"), "key")
-        .select("left_id", "right_id")
-        .repartition(
-            _pair_dedup_width(lfeats.sparkSession), "left_id", "right_id"
-        )
-        .dropDuplicates()
-    )
-    eq = F.zip_with("lsig", "rsig", lambda a, b: (a == b).cast("int"))
-    est = F.aggregate(eq, F.lit(0), lambda acc, x: acc + x) / F.lit(num_hashes)
-    pre = (
-        cands.join(lfeats.select("id", "sig").toDF("left_id", "lsig"), "left_id")
-        .join(rfeats.select("id", "sig").toDF("right_id", "rsig"), "right_id")
-        .where(est >= _est_floor(threshold, num_hashes))
-        .select("left_id", "right_id")
-    )
-    j = pre.join(
-        lfeats.select("id", "sh", "ss").toDF("left_id", "lsh", "ls"), "left_id"
-    ).join(rfeats.select("id", "sh", "ss").toDF("right_id", "rsh", "rs"), "right_id")
-    return _exact_jaccard(j, threshold)
-
-
 def _pair_dedup_width(spark) -> int:
     """Partition count for the width-pinned pair-dedup exchanges: the pin
     exists to FLOOR parallelism against AQE's byte-based coalescing (which
@@ -961,6 +804,10 @@ def _pair_dedup_width(spark) -> int:
 
 _ARTIFACT_UNSET = object()  # sentinel: corpus_artifact not supplied
 
+# Corpus-side byte budget of the fuzzy flagging operator's broadcast kernel;
+# a corpus whose estimated artifact exceeds it takes the pair fallback.
+FUZZY_BROADCAST_BUDGET_MB = 256
+
 
 def build_fuzzy_corpus_artifact(
     corpus_docs: DataFrame,
@@ -969,35 +816,34 @@ def build_fuzzy_corpus_artifact(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_k: int = MINHASH_SHINGLE_K,
-    broadcast_budget_mb: int = 256,
 ):
     """The corpus side of `fuzzy_flags_against_corpus` as a standalone,
     PRECOMPUTABLE per-snapshot artifact: budget probe + feature collect +
     the packed numpy structures the broadcast kernel consumes.  Returns
-    None when the corpus exceeds the broadcast budget (caller falls back
-    to the tiered pair path).  Factored out so pipelines whose corpus side
+    None when the corpus exceeds FUZZY_BROADCAST_BUDGET_MB (caller falls
+    back to the tiered pair path).  Factored out so pipelines whose corpus side
     is ready early (the curation chain's prior-snapshot thread) can build
     it OFF the critical path — exactly the 'signatures/bands/shingles are
     the per-snapshot artifact' shape the operator docstring promises."""
     import numpy as np
 
-    if broadcast_budget_mb > 0:
-        # measured over lower(text) because shingle_set lowercases first and
-        # a few Unicode lowercasings GROW the utf-8 byte length (U+0130 ->
-        # 'i' + U+0307), which would undercut the "never more" bound
-        stat = corpus_docs.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.octet_length(F.lower(F.col(text_col)))), F.lit(0)
-            ).alias("len"),
-        ).first()
-        est = 2 * (
-            stat["n"] * (8 * num_hashes + 96 + 50 * bands)
-            + 8 * (stat["len"] + 2 * stat["n"])
-        )
-        if est > broadcast_budget_mb * (1 << 20):
-            return None
-    else:
+    # measured over lower(text) because shingle_set lowercases first and
+    # a few Unicode lowercasings GROW the utf-8 byte length (U+0130 ->
+    # 'i' + U+0307), which would undercut the "never more" bound
+    stat = corpus_docs.agg(
+        F.count("*").alias("n"),
+        F.coalesce(
+            F.sum(F.octet_length(F.lower(F.col(text_col)))), F.lit(0)
+        ).alias("len"),
+    ).first()
+    # 4 B per uint32 signature slot and per int32 shingle (the packed
+    # arrays below), ~96 B id + object overhead and ~50 B per band-bucket
+    # entry per row; x2 headroom
+    est = 2 * (
+        stat["n"] * (4 * num_hashes + 96 + 50 * bands)
+        + 4 * (stat["len"] + 2 * stat["n"])
+    )
+    if est > FUZZY_BROADCAST_BUDGET_MB * (1 << 20):
         return None
 
     rfeats = _minhash_feats(
@@ -1039,22 +885,21 @@ def fuzzy_flags_against_corpus(
     bands: int = 16,
     shingle_k: int = MINHASH_SHINGLE_K,
     threshold: float = 0.5,
-    broadcast_budget_mb: int = 256,
     corpus_artifact=_ARTIFACT_UNSET,
 ) -> DataFrame:
     """(id, n_corpus_matches, kept) for every NEW document: how many
     corpus documents are MinHash-near (band-collision candidate, estimate
-    gate, exact Jaccard >= threshold), kept = 1 iff none are.  The
-    flagging form of `minhash_lsh_pairs_cross` — same candidate set, same
-    gate floor, same exact-Jaccard boundary, so the two agree row-for-row
-    — but it never materializes the pair table.
+    gate, exact Jaccard >= threshold), kept = 1 iff none are.  Both paths
+    below share one candidate set, gate floor and exact-Jaccard boundary,
+    so they agree row-for-row; the broadcast path never materializes the
+    pair table.
 
     Why a dedicated operator: on a self-similar crawl the pair table is
     the whole cost.  Measured at the 8-replica curation-scaling corpus
     (19k new x 3.4k corpus docs): 9.2M band candidates -> 8.7M gate
     survivors -> 6.75M qualifying pairs, so the pair path ships ~35 GB of
     per-pair shingle arrays into the verify stage just to count them.
-    Here, when the corpus feature table fits `broadcast_budget_mb` (the
+    Here, when the corpus feature table fits FUZZY_BROADCAST_BUDGET_MB (the
     per-snapshot precomputable artifact: signatures, shingle sets, band
     keys), the ENTIRE match count runs inside ONE fused mapInPandas pass
     over the new side's RAW text with the corpus broadcast: per batch,
@@ -1072,11 +917,11 @@ def fuzzy_flags_against_corpus(
     The cutover itself costs one COLUMNAR agg over the raw corpus text —
     no Python pass, no persist: distinct k-shingles per document are
     bounded by the padded utf-8 byte length, so
-    `sum(octet_length(text)) + 2n` upper-bounds the 8 B/shingle term and
+    `sum(octet_length(text)) + 2n` upper-bounds the 4 B/shingle term and
     the estimate is conservative (repetitive text broadcasts less than
-    estimated, never more).  Over budget, falls back to the
-    pair-materializing path (count + left join), which remains the
-    10^12-doc shuffle shape.
+    estimated, never more).  Over budget — or with corpus_artifact=None —
+    it falls back to the pair-materializing path (`_verified_pairs` cross
+    pairs, count + left join), which remains the 10^12-doc shuffle shape.
     """
     import numpy as np
 
@@ -1091,7 +936,6 @@ def fuzzy_flags_against_corpus(
             num_hashes=num_hashes,
             bands=bands,
             shingle_k=shingle_k,
-            broadcast_budget_mb=broadcast_budget_mb,
         )
     if corpus_artifact is None:
         lfeats = _minhash_feats(
@@ -1100,7 +944,7 @@ def fuzzy_flags_against_corpus(
         rfeats = _minhash_feats(
             corpus_docs, id_col, text_col, num_hashes, shingle_k, bands
         )
-        pairs = _cross_pairs_tiered(lfeats.persist(), rfeats, num_hashes, threshold)
+        pairs = _verified_pairs(lfeats.persist(), rfeats, num_hashes, threshold)
         counts = pairs.groupBy("left_id").agg(
             F.count("*").cast("long").alias("n_corpus_matches")
         )
@@ -1229,7 +1073,6 @@ def semantic_dedup(
     target_bucket: int = 4096,
     assignment: str = "auto",
     precision: str = "float64",
-    kernel: str = "auto",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) semantic deduplication, LSH-sharded.
 
@@ -1259,7 +1102,7 @@ def semantic_dedup(
 
     Physical plan — deliberately TWO stages total: one projection for
     bucket assignment, then ONE
-    groupBy(bucket)-applyInArrow stage (pandas fallback pre-4.0; the vec
+    groupBy(bucket)-applyInArrow stage (the vec
     column crosses Arrow→numpy as one zero-copy flatten + gather, not a
     per-row Series materialization) that computes the paper's ENTIRE
     per-cluster semantics vectorized in numpy — centroid (mean), centroid
@@ -1303,13 +1146,7 @@ def semantic_dedup(
     any real corpus; cent_cos is still emitted as float64 after 6-dp
     rounding.  Measured on the 500k × dim-512 scaling corpus: identical
     xxhash64 fingerprints over (id, bucket, root, kept) vs float64
-    (kept = 40,186 under both precisions and both group kernels).
-
-    ``kernel`` selects the group-stage implementation: ``auto`` (default)
-    uses ``applyInArrow`` when the Spark version has it, ``arrow`` /
-    ``pandas`` force one path — both wrap the same numpy core, so outputs
-    are bit-identical; the knob exists for pre-4.0 compatibility testing
-    and controlled same-session A/B benchmarking.
+    (kept = 40,186 under both precisions).
     """
     import math
 
@@ -1317,8 +1154,6 @@ def semantic_dedup(
 
     if precision not in ("float64", "float32"):
         raise ValueError(f"precision must be float64|float32, got {precision!r}")
-    if kernel not in ("auto", "arrow", "pandas"):
-        raise ValueError(f"kernel must be auto|arrow|pandas, got {kernel!r}")
     np_dtype = np.float32 if precision == "float32" else np.float64
     vec_sql = "array<float>" if precision == "float32" else "array<double>"
     # float32 min normal ~1.2e-38: the float64 guard 1e-300 underflows to 0
@@ -1424,8 +1259,7 @@ def semantic_dedup(
     def _core(ids, sids, V):
         """Per-bucket SemDeDup numpy core over STRING-SORTED (ids, sids, V).
 
-        Returns (cent_cos, root, kept); shared verbatim by the Arrow and
-        pandas group kernels so their outputs are bit-identical.
+        Returns (cent_cos, root, kept).
         """
         n = len(ids)
         # centroid + centroid cosine (the oracle replays avg + cosine in SQL)
@@ -1529,24 +1363,6 @@ def semantic_dedup(
             }
         )
 
-    def _bucket_semdedup(key, pdf):
-        ids = pdf["id"].to_numpy(dtype="int64")
-        sids = ids.astype("U")
-        order = np.argsort(sids)
-        ids = ids[order]
-        sids = sids[order]
-        V = np.stack([np.asarray(x, dtype=np_dtype) for x in pdf["vec"]])[order]
-        cent_cos, root, kept = _core(ids, sids, V)
-        return pd.DataFrame(
-            {
-                "id": ids,
-                "bucket": key[0],
-                "root": root,
-                "cent_cos": cent_cos,
-                "kept": kept,
-            }
-        )
-
     # width-pinned bucket exchange: the per-bucket kernel is compute-bound
     # (matmul + CC per group), invisible to AQE's byte-based coalescing,
     # which at small shuffle sizes squeezes every bucket onto 1-2 tasks
@@ -1558,12 +1374,10 @@ def semantic_dedup(
     grouped = v.repartition(
         _psw_sd(embeddings.sparkSession), "bucket"
     ).groupBy("bucket")
-    kernel_schema = "id long, bucket string, root string, cent_cos double, kept int"
-    use_arrow = kernel == "arrow" or (kernel == "auto" and hasattr(grouped, "applyInArrow"))
-    if use_arrow:
-        out = grouped.applyInArrow(_bucket_semdedup_arrow, schema=kernel_schema)
-    else:  # pandas path: pre-4.0 Spark fallback / A-B benchmarking, bit-identical output
-        out = grouped.applyInPandas(_bucket_semdedup, schema=kernel_schema)
+    out = grouped.applyInArrow(
+        _bucket_semdedup_arrow,
+        schema="id long, bucket string, root string, cent_cos double, kept int",
+    )
     return out.select(
         F.col("id").alias(id_col), "bucket", "root", "cent_cos", "kept"
     )

@@ -1,440 +1,49 @@
-"""Multimodal (image/audio/video) column plumbing.
+"""Media column plumbing: opaque `binary` bytes through one Arrow pass.
 
-Treats media as opaque `binary` columns plus typed metadata — the layout a
-100 TB multimodal training pipeline uses (media bytes co-partitioned with
-text, decode deferred to Arrow-batched UDFs near the consumer).
-
-The Spark-side plumbing here is real and tested: schemas, `mapInPandas`
-batch shapes, partition-preserving transforms.  All three towers decode
-REAL content: IMAGE via Pillow if installed, else the stdlib codecs by
-signature — baseline PNG (functions/minipng.py) and JPEG — baseline
-sequential incl. 4:2:0/4:2:2 chroma (r4) AND progressive/SOF2 (r5) — via
-functions/minijpg.py (the formats real web corpora are actually full of);
-AUDIO via stdlib `wave` PCM parsing (functions/miniwav.py); VIDEO via
-the MPNG motion-PNG container (functions/minivid.py — indexed PNG frame
-sequence, the MJPEG role; no H.264-class codec ships in this stdlib, so
-arbitrary mp4 bytes fall back to the deterministic content-hash stand-in,
-same as undecodable image/audio bytes).  Dropping in a
-real codec (PyAV/Pillow) widens the decodable set without any pipeline
-change.
+The engine's inputs are text pages, so media arrives only as an opaque
+`bytes` column (the contract query feeds utf-8 document text).  Nothing
+decodes it: the extractor reports what a corpus pipeline keys media on —
+size and content hash — after the bytes cross the Arrow boundary.
 """
 
 from __future__ import annotations
 
 import hashlib
-import struct
-import zlib
 from typing import Iterator
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    FloatType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-# Media row: bytes + typed metadata (FIXTURES.md §1 html column generalized).
-MEDIA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),       # image | audio | video
-        StructField("mime", StringType(), True),
-        StructField("bytes", BinaryType(), True),
-        StructField("width", IntegerType(), True),       # images/video
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", IntegerType(), True), # audio/video
-    ]
-)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 MEDIA_FEATURES = StructType(
     [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),
+        StructField("media_id", LongType(), True),
+        StructField("kind", StringType(), True),
         StructField("n_bytes", LongType(), False),
         StructField("content_hash", StringType(), False),
-        StructField("feature", ArrayType(FloatType()), False),
     ]
 )
 
 
-def _try_real_decoder(kind: str):
-    """Import-try for optional third-party codecs (Pillow for images);
-    returns None when absent — the stdlib minipng path then handles baseline
-    PNGs, so image decode is REAL either way."""
-    try:  # pragma: no cover - library not present in the sandbox
-        if kind == "image":
-            from PIL import Image  # noqa: F401
+def extract_media_features(media: DataFrame) -> DataFrame:
+    """(media_id, kind, bytes) → (media_id, kind, n_bytes, content_hash) via
+    one Arrow `mapInArrow` pass; content_hash is the md5 hex digest.  NULL
+    bytes count as b"" (n_bytes 0, md5 of the empty string)."""
 
-            return Image
-    except ImportError:
-        pass
-    return None
-
-
-def _decode_image(data: bytes) -> np.ndarray | None:
-    """bytes → (h, w, c) uint8 pixels, or None if not a decodable image.
-    Pillow when installed (all formats); otherwise the pure-stdlib codecs
-    dispatched by signature — baseline PNG (functions/minipng.py) or
-    baseline-sequential JPEG (functions/minijpg.py)."""
-    if not data:
-        return None
-    pil = _try_real_decoder("image")
-    if pil is not None:  # pragma: no cover - Pillow absent in sandbox
-        import io
-
-        try:
-            img = np.asarray(pil.open(io.BytesIO(data)).convert("RGBA"))
-            return img
-        except Exception:
-            return None
-    if data[:2] == b"\xff\xd8":
-        from ..functions.minijpg import decode_jpeg
-
-        try:
-            return decode_jpeg(data)
-        except (ValueError, struct.error, IndexError, OverflowError, KeyError):
-            # truncated scans / arithmetic-coded profiles / missing
-            # tables all map to None (NULL row), never a task abort
-            # (progressive decodes for real since r5)
-            return None
-    from ..functions.minipng import decode_png
-
-    try:
-        return decode_png(data)
-    except (ValueError, zlib.error, struct.error, IndexError, OverflowError):
-        # a corrupt-but-signature-valid PNG (truncated IDAT, short IHDR)
-        # surfaces as zlib/struct errors from the codec internals, not just
-        # ValueError — all decode failures map to None (NULL row), never a
-        # task abort
-        return None
-
-
-def _image_feature(px: np.ndarray, dim: int) -> np.ndarray:
-    """REAL decoded-pixel descriptor: global per-channel mean/std + 2×2
-    spatial grid luminance means, tiled/truncated to `dim` and
-    L2-normalized.  Deterministic, partition-invariant, and actually a
-    function of the pixels (a production pipeline swaps in a vision tower
-    here — the Spark plumbing is identical)."""
-    h, w = px.shape[:2]
-    c = px.shape[2] if px.ndim == 3 else 1
-    flat = px.reshape(h, w, c).astype(np.float64)
-    stats = []
-    for ch in range(c):
-        stats += [flat[:, :, ch].mean(), flat[:, :, ch].std()]
-    lum = flat.mean(axis=2)
-    for ys in (slice(0, h // 2 or 1), slice(h // 2, h)):
-        for xs in (slice(0, w // 2 or 1), slice(w // 2, w)):
-            block = lum[ys, xs]
-            stats.append(block.mean() if block.size else 0.0)
-    v = np.resize(np.array(stats, dtype=np.float64), dim)
-    n = np.linalg.norm(v)
-    return (v / n if n > 0 else v).astype(np.float32)
-
-
-def _decode_audio(data: bytes):
-    """bytes → ((n, ch) float samples, rate), or None if not decodable PCM
-    WAV (functions/miniwav.py — stdlib `wave`, no third-party codec)."""
-    if not data:
-        return None
-    from ..functions.miniwav import decode_wav
-
-    try:
-        return decode_wav(data)
-    except ValueError:
-        return None
-
-
-def _audio_feature(samples: np.ndarray, rate: int, dim: int) -> np.ndarray:
-    """REAL decoded-audio descriptor: duration, per-channel RMS +
-    zero-crossing rate, mean/std, 8 relative spectral-band energies
-    (functions/miniwav.audio_features), tiled/truncated to `dim` and
-    L2-normalized — mirrors `_image_feature`'s shape contract."""
-    from ..functions.miniwav import audio_features
-
-    v = np.resize(audio_features(samples, rate), dim)
-    n = np.linalg.norm(v)
-    return (v / n if n > 0 else v).astype(np.float32)
-
-
-def _decode_video(data: bytes) -> list[np.ndarray] | None:
-    """bytes → list of (h, w, c) uint8 frame pixel arrays, or None if not a
-    decodable MPNG container (functions/minivid.py)."""
-    if not data:
-        return None
-    from ..functions.minivid import frame_at, index_mpng
-
-    idx = index_mpng(data)
-    if idx is None:
-        return None
-    frames = []
-    for off, ln in idx[1]:
-        px = _decode_image(data[off : off + ln])
-        if px is None:
-            return None  # corrupt frame section — treat whole payload as undecodable
-        frames.append(px)
-    return frames
-
-
-def _video_feature(frames: list[np.ndarray], dim: int) -> np.ndarray:
-    """REAL decoded-video descriptor: key-frame channel stats + averaged
-    luma histogram + motion energy (functions/minivid.video_features),
-    tiled/truncated to `dim` and L2-normalized — same shape contract as
-    `_image_feature` / `_audio_feature`."""
-    from ..functions.minivid import video_features
-
-    v = np.resize(video_features(frames), dim)
-    n = np.linalg.norm(v)
-    return (v / n if n > 0 else v).astype(np.float32)
-
-
-def _fake_feature(data: bytes, dim: int) -> np.ndarray:
-    """Deterministic stand-in for UNDECODABLE media bytes of any kind
-    (e.g. real mp4 payloads, for which no codec ships in this container):
-    seed a PRNG from the content hash.  Deterministic so tests can assert
-    exact values and partition-invariance; decodable images / audio / MPNG
-    video take the real paths (_image_feature / _audio_feature /
-    _video_feature)."""
-    seed = zlib.crc32(data) if data else 0
-    rng = np.random.Generator(np.random.PCG64(seed))
-    v = rng.standard_normal(dim)
-    return (v / np.linalg.norm(v)).astype(np.float32)
-
-
-def extract_media_features(media: DataFrame, dim: int = 64) -> DataFrame:
-    """media table → MEDIA_FEATURES via one Arrow `mapInPandas` pass.
-
-    Image rows are REALLY decoded (Pillow if installed, else the stdlib
-    baseline-PNG decoder) and featurized from their pixels
-    (`_image_feature`); audio rows are REALLY decoded (stdlib `wave` PCM)
-    and featurized from their samples (`_audio_feature`); video rows are
-    REALLY decoded when the payload is an MPNG frame container
-    (functions/minivid.py) and featurized from their frame pixels
-    (`_video_feature`).  Only bytes that don't decode at all get the
-    deterministic content-hash-seeded stand-in (`_fake_feature`)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            feats, hashes, sizes = [], [], []
-            for kind, data in zip(pdf["kind"], pdf["bytes"]):
-                b = bytes(data) if data is not None else b""
-                hashes.append(hashlib.md5(b).hexdigest())
-                sizes.append(len(b))
-                f = None
-                if kind == "image":
-                    px = _decode_image(b)
-                    f = _image_feature(px, dim) if px is not None else None
-                elif kind == "audio":
-                    au = _decode_audio(b)
-                    f = _audio_feature(au[0], au[1], dim) if au is not None else None
-                elif kind == "video":
-                    fr = _decode_video(b)
-                    f = _video_feature(fr, dim) if fr is not None else None
-                feats.append((f if f is not None else _fake_feature(b, dim)).tolist())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": sizes,
-                    "content_hash": hashes,
-                    "feature": feats,
-                }
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            data = [b or b"" for b in rb.column(2).to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(0),
+                    rb.column(1),
+                    pa.array([len(b) for b in data], pa.int64()),
+                    pa.array([hashlib.md5(b).hexdigest() for b in data], pa.string()),
+                ],
+                ["media_id", "kind", "n_bytes", "content_hash"],
             )
 
-    return media.mapInPandas(run, schema=MEDIA_FEATURES)
-
-
-RESIZED = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("width", IntegerType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("bytes", BinaryType(), True),  # NULL ⇒ undecodable input
-    ]
-)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL image resize: decode (Pillow or stdlib baseline-PNG) →
-    nearest-neighbor resample → re-encode PNG, one Arrow pass over the image
-    rows.  Undecodable bytes yield NULL output bytes (surfaced, not
-    dropped, so a corpus pipeline can count decode failures)."""
-    from ..functions.minipng import encode_png, resize_nearest
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out_bytes = []
-            for data in pdf["bytes"]:
-                px = _decode_image(bytes(data) if data is not None else b"")
-                out_bytes.append(
-                    encode_png(resize_nearest(px, width, height)) if px is not None else None
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": width,
-                    "height": height,
-                    "bytes": out_bytes,
-                }
-            )
-
-    return (
-        media.where(F.col("kind") == "image")
-        .select("media_id", "bytes")
-        .mapInPandas(run, schema=RESIZED)
-    )
-
-
-SAMPLED_FRAMES = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("frame_ts_ms", IntegerType(), False),
-        StructField("frame_bytes", BinaryType(), True),  # NULL ⇒ undecodable payload
-    ]
-)
-
-
-def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling operator: one output row per sampled timestamp, with
-    the REAL covering-frame bytes (an O(1) indexed byte slice per frame —
-    functions/minivid.index_mpng/frame_at, never a full decode) when the
-    payload is an MPNG container.  Payloads no shipped codec can read (real
-    mp4 bytes) keep the metadata-driven timestamp grid from `duration_ms`
-    with NULL frame_bytes — surfaced, not dropped, so a corpus pipeline can
-    count undecodable rows.  One Arrow `mapInPandas` pass; output frames
-    are standalone PNGs, directly consumable by resize_images/_decode_image.
-    """
-    from ..functions.minivid import frame_at, index_mpng
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, tss, frames = [], [], []
-            for mid, data, dur in zip(
-                pdf["media_id"], pdf["bytes"], pdf["duration_ms"]
-            ):
-                b = bytes(data) if data is not None else b""
-                idx = index_mpng(b)
-                if idx is not None:
-                    duration = idx[0] * len(idx[1])
-                else:
-                    duration = int(dur) if dur is not None and dur > 0 else 1
-                for ts in range(0, max(int(duration), 1), every_ms):
-                    ids.append(int(mid))
-                    tss.append(ts)
-                    frames.append(frame_at(b, idx, ts) if idx is not None else None)
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_ts_ms": tss, "frame_bytes": frames}
-            )
-
-    return (
-        media.where(F.col("kind") == "video")
-        .select("media_id", "bytes", "duration_ms")
-        .mapInPandas(run, schema=SAMPLED_FRAMES)
-    )
-
-
-def synthetic_media_df(spark, n: int = 64, partitions: int = 4) -> DataFrame:
-    """Deterministic fake media table for tests/benchmarks.  Image rows
-    carry REAL encoded bytes — alternating baseline PNG
-    (minipng.encode_png) and baseline-sequential 4:2:0 JPEG
-    (minijpg.encode_jpeg), the two formats web corpora are actually full
-    of; audio rows REAL 16-bit PCM WAVs (seeded sine mixture + noise
-    through miniwav.encode_wav), and video rows REAL MPNG frame containers
-    (seeded moving-gradient PNG frames through minivid.encode_mpng) —
-    every decode path runs on actual bytes.  One in five video rows
-    instead carries an opaque non-MPNG payload to exercise the
-    undecodable-media fallback (NULL frames, hash stand-in feature)."""
-    from ..functions.minijpg import encode_jpeg
-    from ..functions.minipng import encode_png
-    from ..functions.minivid import encode_mpng
-    from ..functions.miniwav import encode_wav
-
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kinds = ["image", "audio", "video"]
-        mimes = {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                kind = kinds[i % 3]
-                rng = np.random.Generator(np.random.PCG64(1000 + i))
-                if kind == "image":
-                    h, w = 6 + (i % 4), 8 + (i % 4)
-                    grad = np.add.outer(np.arange(h) * 9, np.arange(w) * 5)
-                    px = np.stack(
-                        [(grad + 31 * ch + i) % 256 for ch in range(3)], axis=2
-                    ).astype(np.uint8)
-                    px ^= rng.integers(0, 16, size=px.shape, dtype=np.uint8)
-                    if (i // 3) % 2:  # alternate image rows PNG / JPEG
-                        payload = encode_jpeg(px, quality=90, subsample=True)
-                    else:
-                        payload = encode_png(px)
-                    duration_ms = None
-                elif kind == "audio":
-                    rate = 8000
-                    nch = 1 + (i % 2)
-                    nsamp = 400 + (i % 5) * 80
-                    t = np.arange(nsamp) / rate
-                    chans = [
-                        0.6 * np.sin(2 * np.pi * (220 + 55 * ((i + ch) % 7)) * t)
-                        + 0.05 * rng.standard_normal(nsamp)
-                        for ch in range(nch)
-                    ]
-                    payload = encode_wav(np.stack(chans, axis=1), rate)
-                    duration_ms = int(round(1000.0 * nsamp / rate))  # true duration
-                elif i % 15 == 14:  # every 5th video row: undecodable payload
-                    payload = rng.integers(
-                        0, 256, size=128 + (i % 64), dtype=np.uint8
-                    ).tobytes()
-                    duration_ms = 2500 + (i % 10) * 500
-                    w = 64 + (i % 8) * 16
-                    h = 48 + (i % 8) * 12
-                else:
-                    h, w = 5 + (i % 3), 7 + (i % 3)
-                    n_frames, interval = 3 + (i % 4), 500
-                    grad = np.add.outer(np.arange(h) * 11, np.arange(w) * 7)
-                    frame_px = [
-                        np.stack(
-                            [(grad + 29 * ch + 17 * t + i) % 256 for ch in range(3)],
-                            axis=2,
-                        ).astype(np.uint8)
-                        for t in range(n_frames)
-                    ]
-                    payload = encode_mpng(
-                        [encode_png(px) for px in frame_px], interval
-                    )
-                    duration_ms = n_frames * interval  # true duration
-                if kind in ("image", "video"):
-                    width, height = w, h  # true decoded dimensions
-                else:
-                    width = height = None
-                mime = mimes[kind]
-                if kind == "image" and payload[:2] == b"\xff\xd8":
-                    mime = "image/jpeg"
-                rows.append(
-                    {
-                        "media_id": i,
-                        "kind": kind,
-                        "mime": mime,
-                        "bytes": payload,
-                        "width": width,
-                        "height": height,
-                        "duration_ms": duration_ms,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return spark.range(0, n, numPartitions=partitions).mapInPandas(render, schema=MEDIA)
+    return media.select(
+        F.col("media_id").cast("long"), F.col("kind").cast("string"), "bytes"
+    ).mapInArrow(run, schema=MEDIA_FEATURES)

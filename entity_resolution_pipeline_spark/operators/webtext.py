@@ -62,8 +62,8 @@ C4 (Raffel et al. 2020, §2.2) and CCNet (Wenzek et al. 2020) pipelines:
 * `incremental_fuzzy_dedup`
                         — cross-snapshot NEAR-dup flagging: new docs
                           MinHash-banded against the existing corpus only
-                          (dedup.minhash_lsh_pairs_cross), exact-verified,
-                          one flag join back.
+                          (dedup.fuzzy_flags_against_corpus), exact-
+                          verified, one count per new doc.
 * `heavy_hitter_words`  — sketch-then-verify heavy hitters: distributed
                           Misra-Gries (`freqItems`, O(1/support) state, no
                           vocabulary shuffle) proposes candidates, one
@@ -1463,17 +1463,17 @@ def incremental_fuzzy_dedup(
     Returns (doc_id, n_corpus_matches, kept) for every new document,
     kept = 1 iff no corpus neighbor reaches the threshold.
 
-    Same candidate/gate/verify semantics as `dedup.minhash_lsh_pairs_cross`
-    (band keys of the two corpora meet, so new x new and corpus x corpus
-    pairs are never generated; the corpus side's signatures/bands/shingles
-    are the precomputable per-snapshot artifact), but implemented as
-    `dedup.fuzzy_flags_against_corpus`: when the corpus feature table fits
-    the broadcast budget the whole count runs in ONE zero-shuffle
-    mapInPandas pass over the new side — on a self-similar crawl the pair
-    table this operator used to materialize is millions of rows carrying
-    per-pair shingle arrays just to be counted (see the flag operator's
-    measured note); over budget it falls back to the tiered pair path +
-    count + left join."""
+    Implemented by `dedup.fuzzy_flags_against_corpus` with the candidate/
+    gate/verify semantics of `dedup.minhash_lsh_pairs` restricted to cross
+    pairs (band keys of the two corpora meet, so new x new and corpus x
+    corpus pairs are never generated; the corpus side's signatures/bands/
+    shingles are the precomputable per-snapshot artifact): when the corpus
+    feature table fits the broadcast budget the whole count runs in ONE
+    zero-shuffle mapInPandas pass over the new side — on a self-similar
+    crawl a pair table is millions of rows carrying per-pair shingle
+    arrays just to be counted (see the flag operator's measured note);
+    over budget it falls back to the tiered cross-pair path + count +
+    left join."""
     from .dedup import _ARTIFACT_UNSET, fuzzy_flags_against_corpus
 
     # corpus_artifact: optional prebuilt build_fuzzy_corpus_artifact result

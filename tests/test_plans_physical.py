@@ -126,3 +126,22 @@ def test_remove_dup_spans_semi_join_and_pruned_grams(spark, entry_mod):
     assert "LeftSemi" in plan, plan
     scan = next(ln for ln in plan.splitlines() if "FileScan parquet" in ln)
     assert "lang" not in scan and "n_chars" not in scan, scan
+
+
+def test_minhash_verify_kernel_runs_once_per_pair(spark):
+    """The exact-verify intersect kernel must appear exactly ONCE in the
+    final plan of minhash_lsh_pairs: a deterministic UDF alias referenced by
+    both the threshold filter and the output projection is inlined into
+    each, which ships every gate survivor through the Arrow kernel twice."""
+    from entity_resolution_pipeline_spark.operators.dedup import minhash_lsh_pairs
+
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    docs = spark.createDataFrame(
+        list(enumerate([base, base + " tail", "alpha bravo charlie delta echo"])),
+        "doc_id long, text string",
+    )
+    df = minhash_lsh_pairs(docs)
+    assert len(df.collect()) == 1
+    final = _plan(df).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, final
+    assert final.count("ArrowEvalPython [intersect_size_udf") == 1, final

@@ -974,7 +974,7 @@ def test_fuzzy_flags_broadcast_pair_path_parity(spark):
     pp = sorted(
         tuple(r)
         for r in fuzzy_flags_against_corpus(
-            new, corpus, broadcast_budget_mb=0
+            new, corpus, corpus_artifact=None
         ).collect()
     )
     assert bc == pp and len(bc) == 5
@@ -984,18 +984,23 @@ def test_fuzzy_flags_broadcast_pair_path_parity(spark):
 
 
 def test_minhash_cross_matches_self_join_on_cross_pairs(spark):
-    # the cross variant over (A, B) must emit exactly the self-join variant's
-    # pairs restricted to one id from each side
+    # the cross pairs of two feature tables (the fuzzy flagging fallback's
+    # pair path) must be exactly the self-join's pairs restricted to one id
+    # from each side
     from entity_resolution_pipeline_spark.operators import dedup as D
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
     texts = [base, base + " tail", "alpha bravo charlie delta echo foxtrot golf hotel india"]
     docs = _docs(spark, texts)
+
+    def feats(df):
+        return D._minhash_feats(df, "doc_id", "text", 64, D.MINHASH_SHINGLE_K, 16)
+
     a = docs.where("doc_id IN (0, 2)")
     b = docs.where("doc_id = 1")
     cross = {
         (r["left_id"], r["right_id"], r["jaccard"])
-        for r in D.minhash_lsh_pairs_cross(a, b).collect()
+        for r in D._verified_pairs(feats(a), feats(b), 64, 0.5).collect()
     }
     full = {
         (r["left_id"], r["right_id"], r["jaccard"])
