@@ -198,6 +198,43 @@ def test_media_features_plumbing(spark):
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
 
 
+def test_corrupt_png_yields_null_not_task_abort(spark):
+    """Bytes that PASS the PNG signature check but are corrupt inside
+    (IDAT that is not zlib; short IHDR; truncated download) must never kill
+    the Spark task.  Nothing decodes them any more, so there is no NULL
+    output: every row is surfaced with the size and md5 of its bytes."""
+    import hashlib
+    import struct
+    import zlib as _z
+
+    sig = b"\x89PNG\r\n\x1a\n"
+
+    def chunk(tag, data):
+        return struct.pack(">I", len(data)) + tag + data + struct.pack(
+            ">I", _z.crc32(tag + data)
+        )
+
+    ihdr = chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0))
+    # 4x4 black RGB: each row is filter byte 0 + 12 zero bytes
+    idat = _z.compress((b"\x00" + b"\x00" * 12) * 4)
+    good = sig + ihdr + chunk(b"IDAT", idat) + chunk(b"IEND", b"")
+    corrupt = [
+        sig + ihdr + chunk(b"IDAT", b"\x00\x01\x02not-zlib") + chunk(b"IEND", b""),
+        sig + chunk(b"IHDR", b"\x00\x00"),
+        good[: len(good) // 2],
+    ]
+    rows = [(i, "image", blob) for i, blob in enumerate(corrupt)]
+    rows.append((99, "image", good))
+    df = spark.createDataFrame(rows, ["media_id", "kind", "bytes"])
+    feats = {
+        r["media_id"]: (r["n_bytes"], r["content_hash"])
+        for r in multimodal.extract_media_features(df).collect()
+    }
+    assert len(feats) == len(rows)  # no task abort; every row surfaced
+    for i, _, blob in rows:
+        assert feats[i] == (len(blob), hashlib.md5(blob).hexdigest())
+
+
 # ------------------------------------------------------------ semantic dedup
 
 class TestSemanticDedup:

@@ -1,256 +1,86 @@
-"""Pure-stdlib baseline-JPEG codec (functions/minijpg.py) + its multimodal
-integration.  JPEG is lossy, so round-trip tests assert bounded error (and
-restart-marker / sampling variants assert exact agreement with the plain
-decode of the same coefficients where that is guaranteed).
+"""JPEG payloads at the media boundary.
 
-Reference parity note: the reference pipeline has no media decode at all
-(its media handling is metadata-only); this codec exists for the webtext
-multimodal extension, so the oracle here is the JPEG spec itself
-(ITU-T T.81 baseline sequential), not a reference file.
+The engine no longer decodes media: `extract_media_features` keys every
+payload on its size and md5 after one Arrow pass.  What these tests still
+pin for JPEG inputs is what survives of the old decode contract — corrupt
+payloads never abort the task, every row is surfaced, and the key is a
+deterministic function of the bytes (so a baseline and a progressive
+encoding of the same pixels are different payloads).
+
+The fixtures are real 8x8 grayscale JPEGs (quality 85) of the gradient
+`(3*y + 5*x) % 256`: one baseline (SOF0) and one progressive (SOF2).
 """
 
-import numpy as np
-import pytest
+import base64
+import hashlib
 
-from entity_resolution_pipeline_spark.functions.minijpg import (
-    decode_jpeg,
-    encode_jpeg,
-)
 from entity_resolution_pipeline_spark.operators import multimodal
 
-
-def _gradient(h, w, c=3, seed=0):
-    yy, xx = np.mgrid[0:h, 0:w]
-    base = ((yy * 3 + xx * 5 + seed) % 256).astype(np.uint8)
-    if c == 1:
-        return base[:, :, None]
-    return np.stack(
-        [base, np.roll(base, 7, axis=0), np.roll(base, 3, axis=1)], axis=2
-    )
-
-
-def test_roundtrip_bounded_error_all_modes():
-    """Smooth images survive encode→decode within a small mean error for
-    grayscale and RGB at 4:4:4 / 4:2:2 / 4:2:0, including non-multiple-of-8
-    and non-multiple-of-16 dimensions (MCU padding + crop)."""
-    cases = [
-        ((24, 24, 1), "444", 1.5),
-        ((32, 48, 3), "444", 4.0),
-        ((32, 48, 3), "422", 8.0),
-        ((32, 48, 3), "420", 10.0),
-        ((17, 23, 3), "420", 10.0),  # odd dims, padded MCU grid
-        ((9, 13, 1), "444", 1.5),
-    ]
-    for shape, mode, bound in cases:
-        img = _gradient(*shape)
-        out = decode_jpeg(encode_jpeg(img, quality=90, subsample=mode))
-        assert out.shape == shape
-        err = np.abs(out.astype(int) - img.astype(int)).mean()
-        assert err < bound, (shape, mode, err)
+BASELINE = base64.b64decode(
+    "/9j/2wBDAAUDBAQEAwUEBAQFBQUGBwwIBwcHBw8LCwkMEQ8SEhEPERETFhwXExQaFRERGCEY"
+    "Gh0dHx8fExciJCIeJBweHx7/wAALCAAIAAgBAREA/8QA0gAAAAAMAAAAAAAAAAAAAAAAAAEC"
+    "AwQFBgcICQoLEAAAAAAAAACiAAAAAAAAAAAA8AECAwQFBgcICQoREhMUFRYXGBkaISIjJCUm"
+    "JygpKjEyMzQ1Njc4OTpBQkNERUZHSElKUVJTVFVWV1hZWmFiY2RlZmdoaWpxcnN0dXZ3eHl6"
+    "gYKDhIWGh4iJipGSk5SVlpeYmZqhoqOkpaanqKmqsbKztLW2t7i5usHCw8TFxsfIycrR0tPU"
+    "1dbX2Nna4eLj5OXm5+jp6vHy8/T19vf4+fr/2gAIAQEAAD8AhfBggokKLAD/2Q=="
+)
+PROGRESSIVE = base64.b64decode(
+    "/9j/2wBDAAUDBAQEAwUEBAQFBQUGBwwIBwcHBw8LCwkMEQ8SEhEPERETFhwXExQaFRERGCEY"
+    "Gh0dHx8fExciJCIeJBweHx7/wgALCAAIAAgBAREA/8QA4AAAAAAMAAAAAAAAAAAAAAAAAAEC"
+    "AwQFBgcICQoLEAAAAAAAAACwAAAAAAAAAAAA8BAgMEBQYHCAkKCwwNDgAQIDBAUGBwgJChES"
+    "ExQVFhcYGRohIiMkJSYnKCkqMTIzNDU2Nzg5OkFCQ0RFRkdISUpRUlNUVVZXWFlaYWJjZGVm"
+    "Z2hpanFyc3R1dnd4eXqBgoOEhYaHiImKkZKTlJWWl5iZmqGio6SlpqeoqaqxsrO0tba3uLm6"
+    "wcLDxMXGx8jJytHS09TV1tfY2drh4uPk5ebn6Onq8fLz9PX29/j5+v/aAAgBAQAAAAF1/wD/"
+    "2gAIAQEAAAAQf//aAAgBAQABBQISAiAH/9oACAEBAAY/AgD/2gAIAQEAAT8hLmAf/9oACAEB"
+    "AAE/EEIAD//Z"
+)
 
 
-def test_roundtrip_noise_q95():
-    """Worst-case (white noise) content at q=95 still round-trips with
-    bounded max error — no coefficient overflow / Huffman table gaps."""
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, (40, 40, 3), dtype=np.uint8)
-    out = decode_jpeg(encode_jpeg(img, quality=95))
-    assert np.abs(out.astype(int) - img.astype(int)).max() < 48
+def _keys(spark, blobs, parts=1):
+    df = spark.createDataFrame(
+        [(i, "image", b) for i, b in enumerate(blobs)],
+        "media_id long, kind string, bytes binary",
+    ).repartition(parts)
+    return {
+        r["media_id"]: (r["n_bytes"], r["content_hash"])
+        for r in multimodal.extract_media_features(df).collect()
+    }
 
 
-def test_restart_markers_decode_identically():
-    """DRI + RSTn every 2 MCUs decodes to exactly the same pixels as the
-    unsegmented stream (same coefficients, DC predictors reset correctly)."""
-    img = _gradient(40, 56)
-    for mode in ("444", "420"):
-        plain = decode_jpeg(encode_jpeg(img, quality=90, subsample=mode))
-        rst = decode_jpeg(
-            encode_jpeg(img, quality=90, subsample=mode, restart_interval=2)
-        )
-        assert np.array_equal(plain, rst)
-
-
-def test_determinism():
-    img = _gradient(20, 28)
-    assert encode_jpeg(img, quality=80) == encode_jpeg(img, quality=80)
-    assert encode_jpeg(img, quality=80) != encode_jpeg(img, quality=90)
-
-
-def test_progressive_zero_scans_raises_not_gray():
-    """SOF2 followed immediately by EOI (or data ending right after SOF2)
-    has zero completed scans: reconstructing the empty coefficient grids
-    would fabricate an all-gray image where the contract maps undecodable
-    payloads to the stand-in path — it must raise (ADVICE r5 #2)."""
-    import struct as _struct
-
-    sof2_body = _struct.pack(">BHHB", 8, 16, 16, 1) + bytes([1, 0x11, 0])
-    sof2 = b"\xff\xc2" + _struct.pack(">H", 2 + len(sof2_body)) + sof2_body
-    with pytest.raises(ValueError, match="no scans"):
-        decode_jpeg(b"\xff\xd8" + sof2 + b"\xff\xd9")
-    with pytest.raises(ValueError):
-        decode_jpeg(b"\xff\xd8" + sof2)  # truncated right after SOF2
-
-
-def test_rejects_non_jpeg_and_unsupported_profiles():
-    with pytest.raises(ValueError):
-        decode_jpeg(b"not a jpeg")
-    good = encode_jpeg(_gradient(16, 16), quality=85)
-    # flip SOF0 (0xC0) to SOF2: the frame claims progressive but the scan
-    # header is baseline-shaped (Ss=0, Se=63) — must refuse, not mis-decode
-    sof = good.find(b"\xff\xc0")
-    assert sof > 0
-    prog = good[:sof] + b"\xff\xc2" + good[sof + 2 :]
-    with pytest.raises(ValueError, match="DC scan|Se"):
-        decode_jpeg(prog)
-    # arithmetic-coded frame (SOF9) stays refused
-    arith = good[:sof] + b"\xff\xc9" + good[sof + 2 :]
-    with pytest.raises(ValueError, match="SOF|arithmetic"):
-        decode_jpeg(arith)
-    # 12-bit precision claim: first SOF body byte is sample precision
-    twelve = bytearray(good)
-    twelve[sof + 4] = 12
-    with pytest.raises(ValueError, match="precision"):
-        decode_jpeg(bytes(twelve))
+def test_determinism(spark):
+    """Same bytes → same key, at any partitioning; one changed byte
+    changes the hash but not the size."""
+    flipped = BASELINE[:-3] + bytes([BASELINE[-3] ^ 1]) + BASELINE[-2:]
+    blobs = [BASELINE, BASELINE, flipped]
+    k1 = _keys(spark, blobs, parts=1)
+    assert k1 == _keys(spark, blobs, parts=3)
+    assert k1[0] == k1[1] == (len(BASELINE), hashlib.md5(BASELINE).hexdigest())
+    assert k1[2][0] == k1[0][0] and k1[2][1] != k1[0][1]
 
 
 def test_corrupt_jpeg_yields_null_not_task_abort(spark):
     """Bytes passing the FFD8 signature but corrupt inside (truncated scan,
-    garbage segments) map to NULL rows at the multimodal boundary — real
-    corpora are full of truncated downloads."""
-    good = encode_jpeg(_gradient(16, 16), quality=85)
+    garbage segments) never abort the task — real corpora are full of
+    truncated downloads.  There is no decode any more, so no NULL output:
+    every row is surfaced with the size and md5 of the bytes it holds."""
     corrupt = [
-        good[: len(good) // 2],          # chopped mid-scan
+        BASELINE[: len(BASELINE) // 2],  # chopped mid-scan
         b"\xff\xd8\xff\xff\x00\x00",     # nonsense marker stream
         b"\xff\xd8",                      # SOI only
     ]
-    rows = [(i, "image", blob) for i, blob in enumerate(corrupt)]
-    rows.append((99, "image", good))
-    df = spark.createDataFrame(rows, ["media_id", "kind", "bytes"])
-    resized = {
-        r["media_id"]: r["bytes"]
-        for r in multimodal.resize_images(df, 2, 2).collect()
-    }
-    assert resized[99] is not None
-    assert all(resized[i] is None for i in range(len(corrupt)))
-    feats = multimodal.extract_media_features(df, dim=8).collect()
-    assert len(feats) == len(rows)  # every row surfaced, no task abort
+    blobs = corrupt + [BASELINE]
+    keys = _keys(spark, blobs, parts=2)
+    assert len(keys) == len(blobs)  # every row surfaced, no task abort
+    for i, b in enumerate(blobs):
+        assert keys[i] == (len(b), hashlib.md5(b).hexdigest())
 
 
-def test_jpeg_features_are_pixel_functions(spark):
-    """The image tower featurizes DECODED PIXELS for JPEG inputs: a JPEG
-    and a PNG holding the JPEG's decoded pixels featurize identically
-    (byte-hash stand-in would differ), and differently from the stand-in."""
-    from entity_resolution_pipeline_spark.functions.minipng import encode_png
-    from entity_resolution_pipeline_spark.operators.multimodal import (
-        _fake_feature,
-    )
-
-    jpg = encode_jpeg(_gradient(12, 12), quality=90, subsample=True)
-    png_of_decoded = encode_png(decode_jpeg(jpg))
-    df = spark.createDataFrame(
-        [(1, "image", jpg), (2, "image", png_of_decoded)],
-        ["media_id", "kind", "bytes"],
-    )
-    feats = {
-        r["media_id"]: np.array(r["feature"])
-        for r in multimodal.extract_media_features(df, dim=16).collect()
-    }
-    assert np.allclose(feats[1], feats[2], atol=1e-6)
-    assert not np.allclose(feats[1], _fake_feature(jpg, 16), atol=1e-3)
-
-
-def test_synthetic_fixture_mixes_jpeg_and_png(spark):
-    """synthetic_media_df image rows alternate real PNG and real JPEG
-    payloads with matching mime, and every image row decodes for real."""
-    media = multimodal.synthetic_media_df(spark, 24)
-    imgs = [r for r in media.collect() if r["kind"] == "image"]
-    mimes = {r["mime"] for r in imgs}
-    assert mimes == {"image/png", "image/jpeg"}
-    for r in imgs:
-        blob = bytes(r["bytes"])
-        if r["mime"] == "image/jpeg":
-            px = decode_jpeg(blob)
-        else:
-            from entity_resolution_pipeline_spark.functions.minipng import (
-                decode_png,
-            )
-
-            px = decode_png(blob)
-        assert px.shape == (r["height"], r["width"], 3)
-
-
-# ------------------------------------------------------- progressive (SOF2)
-
-
-def _prog():
-    from entity_resolution_pipeline_spark.functions.minijpg import (
-        encode_jpeg_progressive,
-    )
-
-    return encode_jpeg_progressive
-
-
-@pytest.mark.parametrize(
-    "shape,sub,ri",
-    [
-        ((40, 56, 3), False, 0),
-        ((40, 56, 3), True, 0),   # 4:2:0
-        ((33, 47, 3), "422", 0),
-        ((24, 24), False, 0),     # grayscale
-        ((64, 48, 3), True, 4),   # restart markers in every scan
-        ((17, 23), False, 3),
-        ((17, 17, 3), True, 0),   # sub-grid != MCU-padded grid
-        ((9, 25, 3), "422", 0),
-    ],
-)
-def test_progressive_decodes_identical_to_baseline(shape, sub, ri):
-    """Progressive and baseline encodings share the FDCT/quant front end,
-    so a correct Annex-G decode must recover the IDENTICAL quantized
-    coefficients — pixel-for-pixel equality, not bounded error."""
-    encode_jpeg_progressive = _prog()
-    rng = np.random.Generator(np.random.PCG64(42))
-    img = (rng.random(shape) * 255).astype(np.uint8)
-    sub_arg = sub if len(shape) == 3 else False
-    base = decode_jpeg(encode_jpeg(img, 85, sub_arg))
-    prog = decode_jpeg(
-        encode_jpeg_progressive(img, 85, sub_arg, restart_interval=ri)
-    )
-    assert np.array_equal(base, prog)
-
-
-def test_progressive_eob_runs_and_flat_blocks():
-    """Smooth/flat content exercises long EOB runs across blocks (the
-    branch random noise never reaches)."""
-    encode_jpeg_progressive = _prog()
-    grad = np.tile(np.linspace(0, 255, 64, dtype=np.uint8), (64, 1))
-    img = np.stack([grad, grad.T, 255 - grad], axis=2)
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg(img, 60, True)),
-        decode_jpeg(encode_jpeg_progressive(img, 60, True)),
-    )
-    flat = np.full((32, 32, 3), 128, np.uint8)
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg(flat)),
-        decode_jpeg(encode_jpeg_progressive(flat)),
-    )
-
-
-def test_progressive_through_multimodal_tower():
-    """A progressive JPEG payload takes the REAL decode path in
-    extract_media_features — identical feature vector to the baseline
-    encoding of the same pixels, not the content-hash stand-in."""
-    encode_jpeg_progressive = _prog()
-    img = _gradient(24, 32)
-    px_b = multimodal._decode_image(encode_jpeg(img, 85))
-    px_p = multimodal._decode_image(encode_jpeg_progressive(img, 85))
-    assert px_p is not None and np.array_equal(px_b, px_p)
-    fb = multimodal._image_feature(px_b, 64)
-    fp = multimodal._image_feature(px_p, 64)
-    assert np.array_equal(fb, fp)
-
-
-def test_progressive_determinism():
-    encode_jpeg_progressive = _prog()
-    img = _gradient(20, 28)
-    assert encode_jpeg_progressive(img, 80) == encode_jpeg_progressive(img, 80)
-    assert encode_jpeg_progressive(img, 80) != encode_jpeg(img, 80)
+def test_progressive_through_multimodal_tower(spark):
+    """A progressive (SOF2) payload goes through extract_media_features
+    like any other; the key is over bytes, not pixels, so it differs from
+    the baseline encoding of the same image."""
+    assert BASELINE[:2] == PROGRESSIVE[:2] == b"\xff\xd8"
+    assert b"\xff\xc0" in BASELINE and b"\xff\xc2" in PROGRESSIVE
+    keys = _keys(spark, [BASELINE, PROGRESSIVE])
+    assert keys[1] == (len(PROGRESSIVE), hashlib.md5(PROGRESSIVE).hexdigest())
+    assert keys[0] != keys[1]
