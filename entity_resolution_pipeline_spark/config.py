@@ -110,11 +110,12 @@ class FeatureConfig:
     person_cos_bd_product_enabled: bool = True
     person_cos_bd_dampening: float = 0.25
     normalize_features: bool = True    # StandardScaler (feature_engineering.py:931-960)
-    # Physical knob: hash-join the unique-string vector table broadcast-side
-    # (vectors are the dedup'd small side by construction) so the wide
-    # pair×vector rows never shuffle — the cosine UDF consumes them pipelined
-    # in the probe stage.  Disable on corpora whose unique-string vector
-    # table exceeds executor memory; the shuffle-join fallback then applies.
+    # Physical knob for where the battery kernel's cosines come from.  True:
+    # the unique-string vector table is staged once as a host-shared mmap
+    # matrix (see stage_root) and the fused kernel gathers per pair row.
+    # False: cosines are computed once per distinct hash pair through
+    # shuffle joins and carried into the same kernel as columns — no shared
+    # storage needed, for corpora whose vector table outgrows it.
     broadcast_vectors: bool = True
     # Staging root for the broadcast-vector matrix shards.  None → the
     # ERX_STAGE_ROOT env var, else /dev/shm, else the system tempdir.  On a

@@ -288,15 +288,20 @@ _PRED_SCHEMA = StructType(
 )
 
 
-def score(features_df: DataFrame, model: LRModel) -> DataFrame:
-    """Distributed scoring: raw (unscaled) feature table → PREDICTIONS.
-    Scaling is folded into the dot product driver-side (w'·x + b' where
-    w' = w/σ, b' = b − Σ w·μ/σ) so the executor-side work is one matmul per
-    Arrow batch."""
+def folded_weights(model: LRModel) -> tuple[np.ndarray, float]:
+    """The StandardScaler folded into the weights, driver-side: (w', b')
+    with w' = w/σ and b' = b − Σ w·μ/σ, so scoring a RAW feature row is one
+    dot product."""
     mu = np.array([model.scaler[c][0] for c in model.feature_names])
     sd = np.array([model.scaler[c][1] for c in model.feature_names])
-    w_eff = model.weights / sd
-    b_eff = float(model.bias - np.dot(model.weights, mu / sd))
+    return model.weights / sd, float(model.bias - np.dot(model.weights, mu / sd))
+
+
+def score(features_df: DataFrame, model: LRModel) -> DataFrame:
+    """Distributed scoring: raw (unscaled) feature table → PREDICTIONS.
+    Scaling is folded into the weights (`folded_weights`) so the
+    executor-side work is one matmul per Arrow batch."""
+    w_eff, b_eff = folded_weights(model)
     cols = list(model.feature_names)
     thr = model.decision_threshold
 

@@ -1,13 +1,20 @@
 """Pairwise feature battery + standardization.
 
 Re-expresses the reference's per-pair, per-process feature computation
-(feature_engineering.py:332-392 fan-out; battery 426-665) as:
+(feature_engineering.py:332-392 fan-out; battery 426-665) as ONE battery
+kernel per Arrow batch, with stacked-matrix numpy instead of per-pair numpy
+calls across process pools (SURVEY.md §4 'Batched vector ops'):
 
-* two equi-joins assembling a wide pair row (pair ⋈ record_repr ⋈ record_repr
-  — reference J3, querying.py:174-210)
-* ONE `mapInPandas` pass computing the whole battery with stacked-matrix
-  numpy (the reference's dominant overhead was per-pair numpy calls across
-  process pools — SURVEY.md §4 'Batched vector ops')
+* scale path — `pair_features_hashed` / `pair_predictions_hashed`: narrow
+  pair×hash rows feed `_fused_battery_udf`, ONE `mapInPandas` pass that
+  computes the whole battery (and, on the predict path, the LR probability).
+  Cosines are gathered from a host-shared mmap matrix
+  (`broadcast_vectors=True`) or arrive as columns computed once per distinct
+  hash pair through exchanges (`broadcast_vectors=False`); everything else is
+  the same code on both paths.
+* reference path — `record_repr` ⋈ `assemble_pairs` wide pair rows (reference
+  J3, querying.py:174-210) → `pair_features` / `compute_features_pdf`: the
+  direct per-pair re-expression the tests compare the scale path against.
 * StandardScaler as agg + select expressions (feature_engineering.py:931-960;
   sklearn population std, zero-variance columns scale 1.0)
 
@@ -298,10 +305,6 @@ def selected_feature_names(
 
 _NULL_SENT = "NULL"
 
-# wall-clock of the driver-serial staging steps inside the last
-# pair_features_hashed call (Amdahl accounting for the scaling bench)
-LAST_STAGING: dict[str, float] = {}
-
 
 def _parallelism(df: DataFrame) -> int:
     """Target partition count for Python-UDF stages (see
@@ -338,17 +341,14 @@ class _ShardedMatrix:
     """Worker-side view of the shard-staged vector matrix: lazy mmap per
     shard file, vectorized gather by (shard << 32 | row) codes.  Shards hold
     UNIT vectors (pre-normalized at write time, so cosine is one dot with no
-    per-pair norms); a `.norms.npy` sidecar carries the original norms —
-    only their >0 flag is consumed, to keep the zero-vector-is-missing
-    semantics of the unsharded path."""
+    per-pair norms)."""
 
     def __init__(self, shard_paths: list[str], dim: int):
         self.paths = shard_paths
         self.dim = dim
         self._mats: list = [None] * len(shard_paths)
-        self._norms: list = [None] * len(shard_paths)
 
-    def _shard(self, s: int) -> tuple[np.ndarray, np.ndarray]:
+    def _shard(self, s: int) -> np.ndarray:
         m = self._mats[s]
         if m is None:
             try:
@@ -362,17 +362,12 @@ class _ShardedMatrix:
                     "set broadcast_vectors=False for the shuffle-join path."
                 ) from e
             self._mats[s] = m
-            self._norms[s] = np.load(
-                self.paths[s][: -len(".npy")] + ".norms.npy", mmap_mode="r"
-            )
-        return m, self._norms[s]
+        return m
 
-    def gather(self, codes: np.ndarray, ok: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """codes: int64 (shard<<32|row), -1 for missing → (unit-vector matrix
-        (n,dim), norm vector (n,)); rows with ~ok stay zero."""
-        n = len(codes)
-        A = np.zeros((n, self.dim), dtype=np.float32)
-        nv = np.zeros(n, dtype=np.float32)
+    def gather(self, codes: np.ndarray, ok: np.ndarray) -> np.ndarray:
+        """codes: int64 (shard<<32|row), -1 for missing → unit-vector matrix
+        (n,dim); rows with ~ok stay zero."""
+        A = np.zeros((len(codes), self.dim), dtype=np.float32)
         if ok.any():
             act = codes[ok]
             rows_out = np.nonzero(ok)[0]
@@ -380,10 +375,8 @@ class _ShardedMatrix:
             rows = act & 0xFFFFFFFF
             for s in np.unique(shards):
                 m = shards == s
-                mat, norms = self._shard(int(s))
-                A[rows_out[m]] = mat[rows[m]]
-                nv[rows_out[m]] = norms[rows[m]]
-        return A, nv
+                A[rows_out[m]] = self._shard(int(s))[rows[m]]
+        return A
 
 
 _MMAP_CACHE: dict[str, "_ShardedMatrix"] = {}
@@ -432,6 +425,18 @@ def cleanup_stage_dirs() -> None:
     _STAGE_DIRS.clear()
 
 
+def release_stage_dir(path: str) -> None:
+    """Delete ONE staging dir (the `mat_dir` of a stage_vector_matrix
+    result) and unregister it.  For callers that stage per unit of work —
+    a streaming micro-batch — once every DataFrame scored against it has
+    been materialized (same rule as cleanup_stage_dirs)."""
+    import shutil
+
+    shutil.rmtree(path, ignore_errors=True)
+    if path in _STAGE_DIRS:
+        _STAGE_DIRS.remove(path)
+
+
 def _register_stage_dir(path: str) -> None:
     if not _STAGE_DIRS:
         import atexit
@@ -447,21 +452,30 @@ def _fused_battery_udf(
     passthrough: tuple[str, ...] = (),
     score_params: tuple | None = None,
 ):
-    """ONE mapInPandas pass computing the entire battery over the narrow
-    pair×hash rows (pw0), resolving vectors from the host-shared mmap matrix
-    and person strings from a broadcast dict.
+    """THE battery kernel of the scale path: ONE mapInPandas pass computing
+    the entire battery — and, given `score_params`, the LR probability —
+    over the narrow pair×hash rows, for both vector paths.
 
-    Broadcast mode previously ran 3 separate distinct-hash-pair UDF stages
-    (cosine / string sims / birth-death) and then LEFT-JOINED each result
-    back onto the pair table — 8 join-backs whose exchanges dominated the
-    stage (measured ~22 s of a 60 s featurize at 90k pairs).  With the
-    vector matrix already host-shared, recomputing a cosine per pair row is
-    ~2·dim flops — far cheaper than shuffling the pair table through the
-    join-backs — so the fused pass does zero joins and zero extra stages;
+    Cosines come from one of two places:
+    * `bc_vec` set (mmap path): gathered from the host-shared shard matrix
+      by the carried `{f}_h` hash columns, one dot per pair row.  With the
+      matrix host-shared, ~2·dim flops per row is far cheaper than
+      shuffling the pair table through per-field join-backs (the former
+      distinct-hash-pair stages + 8 join-backs measured ~22 s of a 60 s
+      featurize at 90k pairs).
+    * `bc_vec=None` (shuffle-join path): read off the carried `{f}_cosine`
+      columns, computed once per distinct hash pair upstream.
+    Either way a field is PRESENT iff both of its vectors resolved (matrix
+    codes found / carried cosine non-null); absent fields are 0.0.
+    Everything downstream — jaro-winkler over the carried strings, the
+    interactions, birth/death years, scoring — is this one code path;
     string sims and year extraction stay deduplicated via worker-local
     memoization instead of a global distinct."""
-    from pyspark.sql.functions import pandas_udf  # noqa: F401  (doc parity)
+    import uuid
 
+    # worker-local memo key for the shuffle path (the mmap path keys by its
+    # per-invocation staging dir)
+    run_key = uuid.uuid4().hex
     names = feature_names(cfg)
     sf = cfg.string_similarity_field
     raw_metrics = tuple(
@@ -475,30 +489,22 @@ def _fused_battery_udf(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.birth_death import extract_birth_death_years
         from ..functions.similarity import jaro_winkler_similarity
+        from .classify import sigmoid
 
-        index, shard_paths, dim, mat_key = bc_vec.value
-        mat = _MMAP_CACHE.get(mat_key)
-        if mat is None:
-            mat = _ShardedMatrix(shard_paths, dim)
-            _MMAP_CACHE[mat_key] = mat
+        if bc_vec is None:
+            index, mat, mat_key = None, None, run_key
+        else:
+            index, shard_paths, dim, mat_key = bc_vec.value
+            mat = _MMAP_CACHE.get(mat_key)
+            if mat is None:
+                mat = _ShardedMatrix(shard_paths, dim)
+                _MMAP_CACHE[mat_key] = mat
         _evict_stale_caches(mat_key)
-        # keyed by the (per-invocation-unique) staging dir: worker-side
-        # Broadcast handles don't expose .id
+        # keyed per invocation: worker-side Broadcast handles don't expose .id
         caches = _FUSED_CACHE.setdefault(
             mat_key, {"years": {}, "sims": {}}
         )
         years_c, sims_c = caches["years"], caches["sims"]
-        fns = {"jaro_winkler": jaro_winkler_similarity}
-
-        def _years(h: str, value):
-            """Years per distinct person hash, memoized; the value comes off
-            the carried pair-row column (same unique_strings source the old
-            broadcast dict read)."""
-            v = years_c.get(h)
-            if v is None:
-                v = extract_birth_death_years(value or "")
-                years_c[h] = v
-            return v
 
         def _valid_idx(col: pd.Series) -> np.ndarray:
             """Hash column → matrix codes, resolved once per DISTINCT hash in
@@ -516,6 +522,39 @@ def _fused_battery_udf(
                 return np.full(len(col), -1, dtype=np.int64)
             return np.where(codes >= 0, u_codes[np.clip(codes, 0, None)], -1)
 
+        def _jw(lcol: pd.Series, rcol: pd.Series) -> np.ndarray:
+            """Jaro-winkler (no Spark builtin) straight off the carried
+            string columns: factorize → compute once per DISTINCT string
+            pair (memoized across batches) → scatter by code, no per-row
+            Python dict lookups in the hot loop."""
+            combined = lcol.fillna("").str.cat(rcol.fillna(""), sep="\x01")
+            codes, uniqs = pd.factorize(combined)
+            vals_u = np.empty(len(uniqs))
+            for j, u in enumerate(uniqs):
+                v = sims_c.get(u)
+                if v is None:
+                    a, _, b = u.partition("\x01")
+                    v = jaro_winkler_similarity(a, b) if a and b else 0.0
+                    sims_c[u] = v
+                vals_u[j] = v
+            return vals_u[codes]
+
+        def _years(col: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+            """Person column → (birth, death) year arrays, NaN if none: the
+            year cascade runs once per DISTINCT string (memoized across
+            batches)."""
+            codes, uniqs = pd.factorize(col)
+            b_u = np.full(len(uniqs) + 1, np.nan)
+            d_u = np.full(len(uniqs) + 1, np.nan)
+            for j, v in enumerate(uniqs):
+                y = years_c.get(v)
+                if y is None:
+                    y = years_c[v] = extract_birth_death_years(v)
+                b_u[j] = np.nan if y[0] is None else y[0]
+                d_u[j] = np.nan if y[1] is None else y[1]
+            # code -1 (null value → no person) maps to the trailing NaN
+            return b_u[codes], d_u[codes]
+
         for pdf in batches:
             n = len(pdf)
             if not n:
@@ -523,19 +562,23 @@ def _fused_battery_udf(
             out: dict[str, np.ndarray] = {}
             present: dict[str, np.ndarray] = {}
             for f in cfg.cosine_similarities:
-                li = _valid_idx(pdf[f"l_{f}_h"])
-                ri = _valid_idx(pdf[f"r_{f}_h"])
-                ok = (li >= 0) & (ri >= 0)
-                A, _ = mat.gather(li, ok)
-                B, _ = mat.gather(ri, ok)
-                # shards hold unit vectors: cosine is one dot.  A PRESENT
-                # but zero-norm embedding stages as a zero row (dot 0 →
-                # ncos 0.5) — identical to the unfused parity path, where
-                # batch_cosine yields raw 0.0 → (0+1)/2.  Masking such rows
-                # to 0.0 on norms (na>0 & nb>0) would silently diverge the
-                # two paths; only truly MISSING fields (ok False) are 0.0.
-                sims = np.einsum("ij,ij->i", A, B)
-                ncos = ((sims.astype(np.float64) + 1.0) / 2.0)
+                if mat is None:
+                    carried = pdf[f"{f}_cosine"]
+                    ok = carried.notna().to_numpy()
+                    ncos = carried.to_numpy(dtype=np.float64, na_value=0.0)
+                else:
+                    li = _valid_idx(pdf[f"l_{f}_h"])
+                    ri = _valid_idx(pdf[f"r_{f}_h"])
+                    ok = (li >= 0) & (ri >= 0)
+                    A = mat.gather(li, ok)
+                    B = mat.gather(ri, ok)
+                    # shards hold unit vectors: cosine is one dot.  A PRESENT
+                    # but zero-norm embedding stages as a zero row (dot 0 →
+                    # ncos 0.5) — identical to the wide-row reference, where
+                    # batch_cosine yields raw 0.0 → (0+1)/2, and to
+                    # _ncos_udf.  Only truly MISSING fields (ok False) are 0.0.
+                    sims = np.einsum("ij,ij->i", A, B)
+                    ncos = (sims.astype(np.float64) + 1.0) / 2.0
                 out[f"{f}_cosine"] = np.where(ok, ncos, 0.0)
                 present[f] = ok
                 if f == "title" and cfg.title_cosine_squared_enabled:
@@ -551,36 +594,14 @@ def _fused_battery_udf(
             # the carried string columns — see pair_features_hashed)
             for nm in passthrough:
                 out[nm] = pdf[nm].to_numpy(dtype=np.float64)
-            # jaro-winkler (no Spark builtin) runs here, straight off the
-            # carried string columns.  factorize → compute once per DISTINCT
-            # string pair in the batch (memoized across batches) → scatter
-            # by code: no per-row Python dict lookups in the hot loop.
-            def _jw_block(lcol: pd.Series, rcol: pd.Series, out_name: str) -> None:
-                jw = fns["jaro_winkler"]
-                combined = lcol.fillna("").str.cat(rcol.fillna(""), sep="\x01")
-                codes, uniqs = pd.factorize(combined)
-                vals_u = np.empty(len(uniqs))
-                for j, u in enumerate(uniqs):
-                    v = sims_c.get(u)
-                    if v is None:
-                        a, _, b = u.partition("\x01")
-                        v = jw(a, b) if a and b else 0.0
-                        sims_c[u] = v
-                    vals_u[j] = v
-                out[out_name] = vals_u[codes]
-
             if "jaro_winkler" in raw_metrics:
-                _jw_block(pdf["l_pv"], pdf["r_pv"], f"{sf}_jaro_winkler")
+                out[f"{sf}_jaro_winkler"] = _jw(pdf["l_pv"], pdf["r_pv"])
             if "jaro_winkler" in norm_metrics:
-                _jw_block(pdf["l_pn"], pdf["r_pn"], f"{sf}_norm_jaro_winkler")
+                out[f"{sf}_norm_jaro_winkler"] = _jw(pdf["l_pn"], pdf["r_pn"])
 
-            def _sims2(f1: str, f2: str):
-                s1 = out.get(f"{f1}_cosine")
-                s2 = out.get(f"{f2}_cosine")
-                return s1, s2
-
+            # interactions over normalized cosines (absent field → 0.0)
             for f1, f2 in cfg.harmonic_means:
-                s1, s2 = _sims2(f1, f2)
+                s1, s2 = out.get(f"{f1}_cosine"), out.get(f"{f2}_cosine")
                 if s1 is None or s2 is None:
                     continue
                 with np.errstate(divide="ignore", invalid="ignore"):
@@ -589,12 +610,12 @@ def _fused_battery_udf(
                     (s1 > 0) & (s2 > 0) & np.isfinite(h), h, 0.0
                 )
             for f1, f2 in cfg.products:
-                s1, s2 = _sims2(f1, f2)
+                s1, s2 = out.get(f"{f1}_cosine"), out.get(f"{f2}_cosine")
                 if s1 is None or s2 is None:
                     continue
                 out[f"{f1}_{f2}_product"] = s1 * s2
             for f1, f2 in cfg.ratios:
-                s1, s2 = _sims2(f1, f2)
+                s1, s2 = out.get(f"{f1}_cosine"), out.get(f"{f2}_cosine")
                 if s1 is None or s2 is None:
                     continue
                 both = present[f1] & present[f2]
@@ -603,21 +624,8 @@ def _fused_battery_udf(
                 out[f"{f1}_{f2}_ratio"] = np.where(both & (s2 > 0), ratio, 0.0)
 
             if cfg.birth_death_enabled:
-                # factorize per side: the year cascade runs once per DISTINCT
-                # person string in the batch (memoized across batches)
-                def _years_arrays(col: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-                    codes, uniqs = pd.factorize(col)
-                    b_u = np.full(len(uniqs) + 1, np.nan)
-                    d_u = np.full(len(uniqs) + 1, np.nan)
-                    for j, v in enumerate(uniqs):
-                        y = _years(v, v)
-                        b_u[j] = np.nan if y[0] is None else y[0]
-                        d_u[j] = np.nan if y[1] is None else y[1]
-                    # code -1 (null value → no person) maps to the trailing NaN
-                    return b_u[codes], d_u[codes]
-
-                lb, ld = _years_arrays(pdf["l_pv"])
-                rb, rd = _years_arrays(pdf["r_pv"])
+                lb, ld = _years(pdf["l_pv"])
+                rb, rd = _years(pdf["r_pv"])
                 out["birth_death_left"] = (~np.isnan(lb) | ~np.isnan(ld)).astype(np.float64)
                 out["birth_death_right"] = (~np.isnan(rb) | ~np.isnan(rd)).astype(np.float64)
                 bd_match = (
@@ -649,8 +657,7 @@ def _fused_battery_udf(
                 X = np.column_stack(
                     [out.get(c, np.zeros(n)) for c in feat_cols]
                 )
-                z = np.clip(X @ w_eff + b_eff, -100, 100)
-                probs = 1.0 / (1.0 + np.exp(-z))
+                probs = sigmoid(X @ w_eff + b_eff)
                 yield pd.DataFrame(
                     {
                         "left_id": pdf["left_id"],
@@ -673,36 +680,6 @@ def _fused_battery_udf(
     return run
 
 
-def _string_sims_udf(metrics: tuple[str, ...], norm_metrics: tuple[str, ...]):
-    """Arrow UDF: (value, value) → struct of the enabled raw/normalized-name
-    string similarities."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from ..functions.birth_death import normalize_name
-    from ..functions.similarity import jaro_winkler_similarity, levenshtein_similarity
-
-    fields = [StructField(f"raw_{m}", DoubleType(), True) for m in metrics]
-    fields += [StructField(f"norm_{m}", DoubleType(), True) for m in norm_metrics]
-    schema = StructType(fields)
-    fns = {"levenshtein": levenshtein_similarity, "jaro_winkler": jaro_winkler_similarity}
-
-    @pandas_udf(schema)
-    def sims(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-        out: dict[str, list[float]] = {f.name: [] for f in fields}
-        for x, y in zip(a, b):
-            x = x or ""
-            y = y or ""
-            nx, ny = normalize_name(x), normalize_name(y)
-            for m in metrics:
-                out[f"raw_{m}"].append(fns[m](x, y) if x and y else 0.0)
-            for m in norm_metrics:
-                out[f"norm_{m}"].append(fns[m](nx, ny) if nx and ny else 0.0)
-        return pd.DataFrame(out)
-
-    return sims
-
-
 def pair_predictions_hashed(
     pairs: DataFrame,
     rfh: DataFrame,
@@ -714,22 +691,14 @@ def pair_predictions_hashed(
 ) -> DataFrame:
     """Fused featurize+score for the predict path: ONE Python stage computes
     the battery AND the LR probability per Arrow batch, emitting the narrow
-    PREDICTIONS schema.  vs. score(pair_features_hashed(...)) this removes a
-    complete second Python stage round-trip of the 20+-column feature table
-    — at 10^12-pair scale the feature table never materializes at all.
-    Bit-identical to the unfused path (pinned by test_classify)."""
-    if cfg.broadcast_vectors:
-        return pair_features_hashed(
-            pairs, rfh, unique_strings, vectors, cfg, _score_model=model,
-            staged=staged,
-        )
-    from .classify import score
-
-    return score(
-        pair_features_hashed(
-            pairs, rfh, unique_strings, vectors, cfg, staged=staged
-        ),
-        model,
+    PREDICTIONS schema, on either vector path.  vs. score(pair_features_hashed(...))
+    this removes a complete second Python stage round-trip of the
+    20+-column feature table — at 10^12-pair scale the feature table never
+    materializes at all.  Bit-identical to the unfused path (pinned by
+    test_features)."""
+    return pair_features_hashed(
+        pairs, rfh, unique_strings, vectors, cfg, _score_model=model,
+        staged=staged,
     )
 
 
@@ -781,14 +750,13 @@ def stage_vector_matrix(
             if not len(pdf):
                 continue
             arr = np.stack(pdf["embedding"].to_numpy()).astype(np.float32)
-            # pre-normalize: downstream cosine is then one dot product;
-            # original norms ride a sidecar (>0 flag = presence mask)
+            # pre-normalize: downstream cosine is then one dot product
+            # (zero vectors stay zero rows → ncos 0.5, as in the reference)
             norms = np.linalg.norm(arr, axis=1)
             nz = norms > 0
             arr[nz] /= norms[nz, None]
             name = f"shard-{_uuid.uuid4().hex}.npy"
             np.save(os.path.join(mat_dir, name), arr)
-            np.save(os.path.join(mat_dir, name[: -len(".npy")] + ".norms.npy"), norms)
             yield pd.DataFrame(
                 {
                     "hash": pdf["hash"].to_numpy(),
@@ -827,21 +795,27 @@ def pair_features_hashed(
     _score_model=None,
     staged=None,
 ) -> DataFrame:
-    """The scale-path feature battery: every expensive similarity is computed
-    once per DISTINCT (left_hash, right_hash) pair — not per record pair —
-    then equi-joined back; interactions are pure column math.
+    """The scale-path feature battery over NARROW pair×hash rows: no
+    embedding vector ever rides along a record-pair row (the naive
+    pair⋈repr⋈repr join ships |pairs|·fields·2·dim floats through the
+    shuffle — the dominant cost at any scale), and every per-string cost is
+    paid once per DISTINCT hash, not per record pair.  Person/title strings
+    are power-law (159 uniques over 2,354 records in the reference's dev
+    data, output/field_statistics.json) — the reference's dedup-before-embed
+    optimization (embedding.py:106-119) applied to pairwise scoring.
 
-    Why: person/title strings are power-law (159 uniques over 2,354 records
-    in the reference's dev data, output/field_statistics.json), so distinct
-    hash pairs ≪ record pairs, and no embedding vector ever rides along a
-    record-pair row (the naive pair⋈repr⋈repr join ships
-    |pairs|·fields·2·dim floats through the shuffle — the dominant cost at
-    any scale).  This is the reference's dedup-before-embed optimization
-    (embedding.py:106-119) applied to pairwise scoring.
+    The battery itself is `_fused_battery_udf` on both vector paths; they
+    differ only in where the cosines come from:
+    * `cfg.broadcast_vectors` (default): the vector table is staged as a
+      host-shared mmap matrix and the kernel gathers from it;
+    * otherwise (shuffle-join path, no shared storage needed): cosines are
+      computed once per distinct hash pair through exchanges and LEFT-joined
+      back as `{f}_cosine` columns the kernel reads.
 
     Inputs: pairs(left_id, right_id[, match]); rfh = record_field_hashes
     wide table; unique_strings(hash, value); vectors(hash, embedding).
-    Output schema identical to :func:`pair_features`.
+    Output schema identical to :func:`pair_features` — or PREDICTIONS when
+    `_score_model` is given (see pair_predictions_hashed).
     """
     from pyspark import StorageLevel
 
@@ -862,10 +836,10 @@ def pair_features_hashed(
         F.col("record_id").alias("right_id"),
         *[F.col(f).alias(f"r_{f}_h") for f in EMBED_FIELDS],
     )
-    # the raw person value is also carried when the fused path needs
-    # birth/death years — extracting them from the carried column kills the
-    # separate person-strings collect+broadcast job the driver used to run
-    need_pv = bool(raw_metrics) or (cfg.birth_death_enabled and cfg.broadcast_vectors)
+    # the raw person value is carried whenever raw string sims or
+    # birth/death years need it — the kernel reads both off the pair row,
+    # so there is no separate person-strings collect+broadcast job
+    need_pv = bool(raw_metrics) or cfg.birth_death_enabled
     if need_pv or norm_metrics:
         # String-similarity inputs resolved ONCE per distinct person hash and
         # carried as pair-row COLUMNS: levenshtein then runs as a
@@ -900,283 +874,123 @@ def pair_features_hashed(
             sel_r.append(F.col("pn").alias("r_pn"))
         l = l.join(pstr.select(*sel_l), f"l_{sfld}_h", "left")
         r = r.join(pstr.select(*sel_r), f"r_{sfld}_h", "left")
-    # The narrow pair×hash base is materialized ONCE; every distinct-hash-pair
-    # set derives from it (deriving them from the growing join chain would
-    # re-execute each sim UDF per downstream join — quadratic lineage).  In
-    # the stage-table pipeline this persist is the stage's parquet write.
+    # The narrow pair×hash base is materialized ONCE; the shuffle path's
+    # distinct-hash-pair set derives from it (deriving it from the growing
+    # join chain would re-execute the cosine UDF per downstream join —
+    # quadratic lineage).  In the stage-table pipeline this persist is the
+    # stage's parquet write.
     pw0 = pairs.join(l, "left_id").join(r, "right_id").persist(StorageLevel.MEMORY_AND_DISK)
     pw = pw0
 
-    import time as _time
-
-    LAST_STAGING.clear()
     if cfg.broadcast_vectors:
-        _t0 = _time.time()
-        sc = pairs.sparkSession.sparkContext
         # `staged`: a prebuilt matrix (stage_vector_matrix result or a
         # zero-arg callable/future-resolver returning one) — lets prepare()
         # stage the matrix in its background thread so the staging job
         # overlaps the blocking phase instead of serializing at the head of
         # the scoring window.
-        if staged is not None:
-            index, shard_paths, dim, mat_dir = (
-                staged() if callable(staged) else staged
-            )
-        else:
-            index, shard_paths, dim, mat_dir = stage_vector_matrix(vectors, cfg)
-        LAST_STAGING["stage_matrix"] = _time.time() - _t0
-        _t0 = _time.time()
+        if staged is None:
+            staged = stage_vector_matrix(vectors, cfg)
+        elif callable(staged):
+            staged = staged()
         # NOTE: the staging dir must outlive the DataFrame — workers mmap
         # shards lazily at first task use
-        bc = sc.broadcast((index, shard_paths, dim, mat_dir))
-        # birth/death years read the carried l_pv/r_pv pair-row columns —
-        # no separate person-strings collect+broadcast job
-
-        has_match = "match" in pairs.columns
-        fields = [
-            StructField("left_id", pw0.schema["left_id"].dataType, False),
-            StructField("right_id", pw0.schema["right_id"].dataType, False),
+        bc = pairs.sparkSession.sparkContext.broadcast(tuple(staged))
+    else:
+        # Shuffle-join path (vector table too big for shared storage):
+        # cosine at GLOBAL distinct-hash-pair granularity.  Cosine is a
+        # function of the hash pair alone, so ONE UDF stage serves every
+        # field, and a hash pair shared by two fields is computed once.
+        # Explicit repartitions: the Python stage must run at the target
+        # width regardless of AQE's byte-based coalescing (UDF cost/row ≫
+        # bytes/row).
+        bc = None
+        ncos = _ncos_udf()
+        vecs = vectors.where(F.col("embedding").isNotNull())
+        vec_l = vecs.select(F.col("hash").alias("lh"), F.col("embedding").alias("lv"))
+        vec_r = vecs.select(F.col("hash").alias("rh"), F.col("embedding").alias("rv"))
+        hp_parts = [
+            pw0.select(
+                F.col(f"l_{f}_h").alias("lh"), F.col(f"r_{f}_h").alias("rh")
+            ).where(valid(F.col(f"l_{f}_h")) & valid(F.col(f"r_{f}_h")))
+            for f in cfg.cosine_similarities
         ]
-        score_params = None
-        if _score_model is not None:
-            from pyspark.sql.types import BooleanType
-
-            # fold the scaler into the weights (see classify.score)
-            mu = np.array([_score_model.scaler[c][0] for c in _score_model.feature_names])
-            sd = np.array([_score_model.scaler[c][1] for c in _score_model.feature_names])
-            w_eff = _score_model.weights / sd
-            b_eff = float(_score_model.bias - np.dot(_score_model.weights, mu / sd))
-            score_params = (
-                list(_score_model.feature_names),
-                w_eff,
-                b_eff,
-                _score_model.decision_threshold,
-            )
-            fields += [
-                StructField("probability", DoubleType(), False),
-                StructField("match", BooleanType(), False),
-            ]
-            out_schema = StructType(fields)
-        else:
-            if has_match:
-                fields.append(StructField("match", pw0.schema["match"].dataType, True))
-            fields += [StructField(nm, DoubleType(), True) for nm in feature_names(cfg)]
-            out_schema = StructType(fields)
-
-        # levenshtein similarities as whole-stage-codegen JVM expressions
-        # over the carried string columns; the fused UDF passes them through
-        def lev_expr(a, b):
-            mx = F.greatest(F.length(a), F.length(b))
-            return (
-                F.when(
-                    (F.length(a) > 0) & (F.length(b) > 0),
-                    1.0 - F.levenshtein(a, b) / mx,
-                )
-                .otherwise(0.0)
-                .cast("double")
-            )
-
-        pw_in = pw0
-        jvm_sims = []
-        if "levenshtein" in raw_metrics:
-            pw_in = pw_in.withColumn(f"{sfld}_levenshtein", lev_expr(F.col("l_pv"), F.col("r_pv")))
-            jvm_sims.append(f"{sfld}_levenshtein")
-        if "levenshtein" in norm_metrics:
-            pw_in = pw_in.withColumn(
-                f"{sfld}_norm_levenshtein", lev_expr(F.col("l_pn"), F.col("r_pn"))
-            )
-            jvm_sims.append(f"{sfld}_norm_levenshtein")
-
-        fused = _fused_battery_udf(
-            bc, cfg, out_schema,
-            passthrough=tuple(jvm_sims), score_params=score_params,
+        hp_all = hp_parts[0]
+        for p in hp_parts[1:]:
+            hp_all = hp_all.unionAll(p)
+        hp_all = hp_all.distinct().repartition(_parallelism(pairs))
+        sim_all = (
+            hp_all.join(vec_l, "lh")
+            .join(vec_r, "rh")
+            .repartition(_parallelism(pairs))
+            .select("lh", "rh", ncos("lv", "rv").alias("ncos"))
         )
-        # explicit repartition: the Python stage must run at half-width
-        # regardless of AQE's byte-based coalescing (UDF cost/row ≫ bytes/row)
-        return pw_in.repartition(_parallelism(pairs)).mapInPandas(fused, schema=out_schema)
+        sim_all = sim_all.persist(StorageLevel.MEMORY_AND_DISK)
+        sim_all.count()  # eager: materialize the UDF stage now — left lazy, AQE
+        # may fold it into a broadcast-side build evaluated near-serially inside
+        # the assembly job (measured 6×)
+        # NULL after the left join = a vector is missing = field absent
+        for f in cfg.cosine_similarities:
+            lh, rh = f"l_{f}_h", f"r_{f}_h"
+            simf = sim_all.select(
+                F.col("lh").alias(lh), F.col("rh").alias(rh), F.col("ncos").alias(f"{f}_cosine")
+            )
+            pw = pw.join(simf, [lh, rh], "left")
 
-    # ---- shuffle-join path (vector table exceeds executor memory) ----
-    ncos = _ncos_udf()
-    vec_l = vectors.select(F.col("hash").alias("lh"), F.col("embedding").alias("lv"))
-    vec_r = vectors.select(F.col("hash").alias("rh"), F.col("embedding").alias("rv"))
-
-    # Cosine at GLOBAL distinct-hash-pair granularity: cosine is a function
-    # of the hash pair alone, so ONE fused UDF stage serves every field —
-    # stage count, scheduling latency, and per-worker broadcast loads don't
-    # multiply by the field count, and a hash pair shared by two fields is
-    # computed once.  Explicit repartition: the Python stage must run at
-    # full width regardless of AQE's byte-based coalescing (UDF cost/row ≫
-    # bytes/row).
-    hp_parts = [
-        pw0.select(
-            F.col(f"l_{f}_h").alias("lh"), F.col(f"r_{f}_h").alias("rh")
-        ).where(valid(F.col(f"l_{f}_h")) & valid(F.col(f"r_{f}_h")))
-        for f in cfg.cosine_similarities
+    fields = [
+        StructField("left_id", pw0.schema["left_id"].dataType, False),
+        StructField("right_id", pw0.schema["right_id"].dataType, False),
     ]
-    hp_all = hp_parts[0]
-    for p in hp_parts[1:]:
-        hp_all = hp_all.unionAll(p)
-    hp_all = hp_all.distinct().repartition(_parallelism(pairs))
-    sim_all = (
-        hp_all.join(vec_l, "lh")
-        .join(vec_r, "rh")
-        .repartition(_parallelism(pairs))
-        .select("lh", "rh", ncos("lv", "rv").alias("ncos"))
+    score_params = None
+    if _score_model is not None:
+        from pyspark.sql.types import BooleanType
+
+        from .classify import folded_weights
+
+        score_params = (
+            list(_score_model.feature_names),
+            *folded_weights(_score_model),
+            _score_model.decision_threshold,
+        )
+        fields += [
+            StructField("probability", DoubleType(), False),
+            StructField("match", BooleanType(), False),
+        ]
+    else:
+        if "match" in pairs.columns:
+            fields.append(StructField("match", pw0.schema["match"].dataType, True))
+        fields += [StructField(nm, DoubleType(), True) for nm in feature_names(cfg)]
+    out_schema = StructType(fields)
+
+    # levenshtein similarities as whole-stage-codegen JVM expressions
+    # over the carried string columns; the fused UDF passes them through
+    def lev_expr(a, b):
+        mx = F.greatest(F.length(a), F.length(b))
+        return (
+            F.when(
+                (F.length(a) > 0) & (F.length(b) > 0),
+                1.0 - F.levenshtein(a, b) / mx,
+            )
+            .otherwise(0.0)
+            .cast("double")
+        )
+
+    jvm_sims = []
+    if "levenshtein" in raw_metrics:
+        pw = pw.withColumn(f"{sfld}_levenshtein", lev_expr(F.col("l_pv"), F.col("r_pv")))
+        jvm_sims.append(f"{sfld}_levenshtein")
+    if "levenshtein" in norm_metrics:
+        pw = pw.withColumn(
+            f"{sfld}_norm_levenshtein", lev_expr(F.col("l_pn"), F.col("r_pn"))
+        )
+        jvm_sims.append(f"{sfld}_norm_levenshtein")
+
+    fused = _fused_battery_udf(
+        bc, cfg, out_schema,
+        passthrough=tuple(jvm_sims), score_params=score_params,
     )
-    sim_all = sim_all.persist(StorageLevel.MEMORY_AND_DISK)
-    sim_all.count()  # eager: materialize the UDF stage now — left lazy, AQE
-    # may fold it into a broadcast-side build evaluated near-serially inside
-    # the assembly job (measured 6×)
-    for f in cfg.cosine_similarities:
-        lh, rh = f"l_{f}_h", f"r_{f}_h"
-        simf = sim_all.select(
-            F.col("lh").alias(lh), F.col("rh").alias(rh), F.col("ncos").alias(f"{f}_cosine")
-        )
-        pw = pw.join(simf, [lh, rh], "left")
-        pw = pw.withColumn(f"{f}_cosine", F.coalesce(F.col(f"{f}_cosine"), F.lit(0.0)))
-
-    presence = {
-        f: valid(F.col(f"l_{f}_h")) & valid(F.col(f"r_{f}_h"))
-        for f in cfg.cosine_similarities
-    }
-
-    if cfg.title_cosine_squared_enabled and "title" in cfg.cosine_similarities:
-        pw = pw.withColumn("title_cosine_squared", F.pow(F.col("title_cosine"), 2))
-    if cfg.low_composite_penalty_enabled and "composite" in cfg.cosine_similarities:
-        pw = pw.withColumn(
-            "low_composite_penalty",
-            F.when(
-                presence["composite"]
-                & (F.col("composite_cosine") < F.lit(cfg.low_composite_penalty_threshold)),
-                1.0,
-            ).otherwise(0.0),
-        )
-
-    # string sims + birth/death over the person field, hash-pair deduped
-    sf = cfg.string_similarity_field
-    raw_metrics = tuple(m for m in cfg.string_similarity_metrics if m in ("levenshtein", "jaro_winkler"))
-    norm_metrics = tuple(m for m in cfg.normalized_name_sims if m in ("levenshtein", "jaro_winkler"))
-    if raw_metrics or norm_metrics:
-        lh, rh = f"l_{sf}_h", f"r_{sf}_h"
-        hp = (
-            pw0.select(F.col(lh), F.col(rh))
-            .where(valid(F.col(lh)) & valid(F.col(rh)))
-            .distinct()
-            .repartition(_parallelism(pairs))
-        )
-        us_l = unique_strings.select(F.col("hash").alias("lh"), F.col("value").alias("lval"))
-        us_r = unique_strings.select(F.col("hash").alias("rh"), F.col("value").alias("rval"))
-        sims_udf = _string_sims_udf(raw_metrics, norm_metrics)
-        sim = (
-            hp.join(us_l, F.col(lh) == F.col("lh"))
-            .join(us_r, F.col(rh) == F.col("rh"))
-            .repartition(_parallelism(pairs))
-            .select(F.col(lh), F.col(rh), sims_udf("lval", "rval").alias("ss"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        sim.count()  # eager (see cosine note)
-        cols = [F.col(lh), F.col(rh)]
-        for m in raw_metrics:
-            cols.append(F.col(f"ss.raw_{m}").alias(f"{sf}_{m}"))
-        for m in norm_metrics:
-            cols.append(F.col(f"ss.norm_{m}").alias(f"{sf}_norm_{m}"))
-        pw = pw.join(sim.select(*cols), [lh, rh], "left")
-        for m in raw_metrics:
-            pw = pw.withColumn(f"{sf}_{m}", F.coalesce(F.col(f"{sf}_{m}"), F.lit(0.0)))
-        for m in norm_metrics:
-            pw = pw.withColumn(f"{sf}_norm_{m}", F.coalesce(F.col(f"{sf}_norm_{m}"), F.lit(0.0)))
-
-    # interactions: pure column math over normalized cosines
-    def _cos(f: str):
-        return F.col(f"{f}_cosine") if f"{f}_cosine" in pw.columns else None
-
-    for f1, f2 in cfg.harmonic_means:
-        s1, s2 = _cos(f1), _cos(f2)
-        if s1 is None or s2 is None:
-            continue
-        pw = pw.withColumn(
-            f"{f1}_{f2}_harmonic",
-            F.when((s1 > 0) & (s2 > 0), 2.0 * s1 * s2 / (s1 + s2)).otherwise(0.0),
-        )
-    for f1, f2 in cfg.products:
-        s1, s2 = _cos(f1), _cos(f2)
-        if s1 is None or s2 is None:
-            continue
-        pw = pw.withColumn(f"{f1}_{f2}_product", s1 * s2)
-    for f1, f2 in cfg.ratios:
-        s1, s2 = _cos(f1), _cos(f2)
-        if s1 is None or s2 is None:
-            continue
-        pw = pw.withColumn(
-            f"{f1}_{f2}_ratio",
-            F.when(
-                presence[f1] & presence[f2] & (s2 > 0),
-                2.0 / (1.0 + F.exp(-s1 / s2)) - 1.0,
-            ).otherwise(0.0),
-        )
-
-    # birth/death: extract years once per DISTINCT person hash
-    if cfg.birth_death_enabled:
-        from ..functions.birth_death import birth_death_udf
-
-        lh, rh = f"l_{sf}_h", f"r_{sf}_h"
-        person_hashes = (
-            pw0.select(F.col(lh).alias("h"))
-            .unionAll(pw0.select(F.col(rh).alias("h")))
-            .where(valid(F.col("h")))
-            .distinct()
-        )
-        years = (
-            person_hashes.join(unique_strings, F.col("h") == F.col("hash"))
-            .repartition(_parallelism(pairs))
-            .select("h", birth_death_udf("value").alias("bd"))
-            .select("h", F.col("bd.birth_year").alias("by"), F.col("bd.death_year").alias("dy"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        years.count()  # eager (see cosine note)
-        pw = pw.join(
-            years.select(F.col("h").alias(lh), F.col("by").alias("l_by"), F.col("dy").alias("l_dy")),
-            lh,
-            "left",
-        ).join(
-            years.select(F.col("h").alias(rh), F.col("by").alias("r_by"), F.col("dy").alias("r_dy")),
-            rh,
-            "left",
-        )
-        has = lambda b, d: (b.isNotNull() | d.isNotNull()).cast("double")  # noqa: E731
-        pw = pw.withColumn("birth_death_left", F.coalesce(has(F.col("l_by"), F.col("l_dy")), F.lit(0.0)))
-        pw = pw.withColumn("birth_death_right", F.coalesce(has(F.col("r_by"), F.col("r_dy")), F.lit(0.0)))
-        bd_match = (
-            (F.col("l_by").isNotNull() & F.col("r_by").isNotNull() & (F.col("l_by") == F.col("r_by")))
-            | (F.col("l_dy").isNotNull() & F.col("r_dy").isNotNull() & (F.col("l_dy") == F.col("r_dy")))
-        ).cast("double")
-        pw = pw.withColumn("birth_death_match", F.coalesce(bd_match, F.lit(0.0)))
-        lev_name = f"{sf}_levenshtein"
-        if cfg.person_lev_bd_product_enabled and lev_name in pw.columns:
-            pw = pw.withColumn(
-                "person_levenshtein_birth_death_match_product",
-                F.when(F.col("birth_death_match") == 1.0, F.col(lev_name)).otherwise(
-                    F.col(lev_name) * cfg.person_lev_bd_dampening
-                ),
-            )
-        if cfg.person_cos_bd_product_enabled and "person" in cfg.cosine_similarities:
-            pc = F.col("person_cosine")
-            pw = pw.withColumn(
-                "person_cosine_birth_death_match_product",
-                F.when(
-                    presence["person"],
-                    F.when(F.col("birth_death_match") == 1.0, pc).otherwise(
-                        pc * cfg.person_cos_bd_dampening
-                    ),
-                ).otherwise(0.0),
-            )
-
-    names = feature_names(cfg)
-    out_cols = ["left_id", "right_id"]
-    if "match" in pairs.columns:
-        out_cols.append("match")
-    out_cols += [
-        nm if nm in pw.columns else F.lit(0.0).alias(nm) for nm in names
-    ]
-    return pw.select(*out_cols)
+    # explicit repartition: the Python stage must run at half-width
+    # regardless of AQE's byte-based coalescing (UDF cost/row ≫ bytes/row)
+    return pw.repartition(_parallelism(pairs)).mapInPandas(fused, schema=out_schema)
 
 
 def fit_scaler(features_df: DataFrame, cols: list[str]) -> dict[str, tuple[float, float]]:

@@ -176,7 +176,7 @@ def _batch_processor(
         if model is not None:
             from ..operators import embedding as E
             from ..operators import preprocess as P
-            from ..operators.features import pair_predictions_hashed
+            from ..operators import features as FE
 
             melted = P.melt_fields(records)
             P.record_field_hashes(melted).write.mode("overwrite").parquet(
@@ -210,15 +210,28 @@ def _batch_processor(
                 .drop("ingest_batch")
                 .dropDuplicates(["hash"])
             )
-            preds = pair_predictions_hashed(
-                pairs, rfh_all, us_all, vec_all, model, cfg.features
-            ).persist()
-            n_scored = preds.count()
-            n_match = preds.where("match").count()
-            preds.write.mode("overwrite").parquet(
-                os.path.join(pred_root, f"ingest_batch={batch_id}")
+            # stage the accumulated vector table ONCE for this batch and
+            # release exactly that dir once its predictions are written —
+            # otherwise every micro-batch leaves a full matrix copy behind
+            staged = (
+                FE.stage_vector_matrix(vec_all, cfg.features)
+                if cfg.features.broadcast_vectors
+                else None
             )
-            preds.unpersist()
+            try:
+                preds = FE.pair_predictions_hashed(
+                    pairs, rfh_all, us_all, vec_all, model, cfg.features,
+                    staged=staged,
+                ).persist()
+                n_scored = preds.count()
+                n_match = preds.where("match").count()
+                preds.write.mode("overwrite").parquet(
+                    os.path.join(pred_root, f"ingest_batch={batch_id}")
+                )
+                preds.unpersist()
+            finally:
+                if staged is not None:
+                    FE.release_stage_dir(staged[3])
             metrics["pairs_scored"] = float(n_scored)
             metrics["pairs_matched"] = float(n_match)
 

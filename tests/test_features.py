@@ -10,6 +10,8 @@ the strongest semantics check we have.
 
 from __future__ import annotations
 
+import dataclasses
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -42,32 +44,42 @@ def prep(spark):
     return melted, uniq, rfh, vectors, pairs
 
 
+# both vector paths of the scale battery: the host-shared mmap matrix
+# (default) and the shuffle-join cosines (no shared storage)
+_VECTOR_PATHS = (True, False)
+
+
+def _by_pair(df):
+    return df.toPandas().set_index(["left_id", "right_id"]).sort_index()
+
+
 def test_hashed_equals_wide_row_battery(prep):
     melted, uniq, rfh, vectors, pairs = prep
     cfg = DEFAULT_CONFIG.features
-    old = FE.pair_features(
-        FE.assemble_pairs(pairs, FE.record_repr(melted, vectors)), cfg
-    ).toPandas().set_index(["left_id", "right_id"]).sort_index()
-    new = (
-        FE.pair_features_hashed(pairs, rfh, uniq, vectors, cfg)
-        .toPandas()
-        .set_index(["left_id", "right_id"])
-        .sort_index()
+    old = _by_pair(
+        FE.pair_features(FE.assemble_pairs(pairs, FE.record_repr(melted, vectors)), cfg)
     )
-    assert len(old) == len(new) and sorted(old.columns) == sorted(new.columns)
-    for c in old.columns:
-        if c == "match":
-            assert (old[c] == new[c]).all()
-        else:
-            assert np.allclose(
-                old[c].to_numpy(float), new[c].to_numpy(float), atol=1e-6
-            ), c
+    for bv in _VECTOR_PATHS:
+        new = _by_pair(
+            FE.pair_features_hashed(
+                pairs, rfh, uniq, vectors, dataclasses.replace(cfg, broadcast_vectors=bv)
+            )
+        )
+        assert len(old) == len(new) and sorted(old.columns) == sorted(new.columns), bv
+        for c in old.columns:
+            if c == "match":
+                assert (old[c] == new[c]).all(), bv
+            else:
+                assert np.allclose(
+                    old[c].to_numpy(float), new[c].to_numpy(float), atol=1e-6
+                ), (bv, c)
 
 
 def test_fused_scoring_matches_unfused(prep):
     """pair_predictions_hashed (one fused Python stage) must reproduce
     score(pair_features_hashed(...)) bit-for-bit — same sigmoid clip, same
-    folded scaler."""
+    folded scaler — on both vector paths (each side built from the same
+    config)."""
     from entity_resolution_pipeline_spark.operators import classify as C
 
     melted, uniq, rfh, vectors, pairs = prep
@@ -76,25 +88,19 @@ def test_fused_scoring_matches_unfused(prep):
     cols = FE.selected_feature_names(cfg.features, cfg.feature_selection)
     model, _ = C.fit(feats, cols, cfg.classifier)
 
-    unfused = (
-        C.score(feats, model)
-        .toPandas()
-        .set_index(["left_id", "right_id"])
-        .sort_index()
-    )
-    fused = (
-        FE.pair_predictions_hashed(
-            pairs.drop("match"), rfh, uniq, vectors, model, cfg.features
+    for bv in _VECTOR_PATHS:
+        fcfg = dataclasses.replace(cfg.features, broadcast_vectors=bv)
+        unfused = _by_pair(
+            C.score(FE.pair_features_hashed(pairs, rfh, uniq, vectors, fcfg), model)
         )
-        .toPandas()
-        .set_index(["left_id", "right_id"])
-        .sort_index()
-    )
-    assert len(unfused) == len(fused)
-    assert (unfused["match"] == fused["match"]).all()
-    assert np.allclose(
-        unfused["probability"].to_numpy(), fused["probability"].to_numpy(), atol=1e-12
-    )
+        fused = _by_pair(
+            FE.pair_predictions_hashed(pairs.drop("match"), rfh, uniq, vectors, model, fcfg)
+        )
+        assert len(unfused) == len(fused), bv
+        assert (unfused["match"] == fused["match"]).all(), bv
+        assert np.allclose(
+            unfused["probability"].to_numpy(), fused["probability"].to_numpy(), atol=1e-12
+        ), bv
 
 
 def test_feature_names_and_selection():

@@ -60,7 +60,11 @@ def test_dedup_agg_is_partial(spark, entry_mod):
 
 def test_fused_predict_is_one_python_stage(spark):
     """The predict path must contain exactly ONE Python (mapInPandas) node —
-    battery + scoring fused; no second Arrow round-trip."""
+    battery + scoring fused; no second Arrow round-trip — on both vector
+    paths: the shuffle-join path adds only its distinct-hash-pair cosine
+    UDF, no string-sims or birth/death stage of its own."""
+    import dataclasses
+
     from pyspark.sql import functions as F
 
     from entity_resolution_pipeline_spark import synth
@@ -81,11 +85,17 @@ def test_fused_predict_is_one_python_stage(spark):
 
     membership = B.block_membership(prep.records, DEFAULT_CONFIG.blocking)
     candidates = B.candidate_pairs(membership, DEFAULT_CONFIG.blocking)
-    preds = PL.score_pairs(candidates, prep, model, DEFAULT_CONFIG)
-    plan = _plan(preds)
-    # exactly one battery/scoring Python stage ("run"); the other
-    # MapInPandas nodes in this TEST plan are the synthetic page generator
-    assert plan.count("MapInPandas run(") == 1, plan
+    shuffle_cfg = dataclasses.replace(
+        DEFAULT_CONFIG,
+        features=dataclasses.replace(DEFAULT_CONFIG.features, broadcast_vectors=False),
+    )
+    for cfg in (DEFAULT_CONFIG, shuffle_cfg):
+        plan = _plan(PL.score_pairs(candidates, prep, model, cfg))
+        # exactly one battery/scoring Python stage ("run"); the other
+        # MapInPandas nodes in this TEST plan are the synthetic page generator
+        assert plan.count("MapInPandas run(") == 1, plan
+        assert "ArrowEvalPython [sims" not in plan, plan
+        assert "ArrowEvalPython [birth_death_udf" not in plan, plan
 
 
 def test_levenshtein_is_jvm_codegen(spark):

@@ -164,6 +164,46 @@ def test_incremental_scoring_matches_batch(spark, tmp_path):
     assert any(v[1] for v in stream_preds.values())  # some matches found
 
 
+def test_incremental_scoring_releases_vector_staging(spark, tmp_path, monkeypatch):
+    """Each scored micro-batch stages the accumulated vector table once and
+    removes that staging dir after its predictions are written — no
+    per-batch matrix copy survives the stream (on tmpfs a leaked copy is
+    RAM until process exit)."""
+    import numpy as np
+
+    from entity_resolution_pipeline_spark.operators import classify as C
+    from entity_resolution_pipeline_spark.operators import features as FE
+
+    created = []
+    real_stage = FE.stage_vector_matrix
+
+    def recording_stage(*args, **kwargs):
+        staged = real_stage(*args, **kwargs)
+        created.append(staged[3])
+        return staged
+
+    monkeypatch.setattr(FE, "stage_vector_matrix", recording_stage)
+
+    tmp = str(tmp_path)
+    out = os.path.join(tmp, "out")
+    cfg = _cfg_no_cap()
+    names = FE.selected_feature_names(cfg.features, cfg.feature_selection)
+    model = C.LRModel(
+        weights=np.ones(len(names)),
+        bias=0.0,
+        feature_names=names,
+        decision_threshold=0.5,
+        scaler={c: (0.0, 1.0) for c in names},
+    )
+    in_path = _write_pages(spark, tmp, "b0", 0, 60)
+    _write_pages(spark, tmp, "b1", 60, 100)
+    run_incremental(spark, in_path, out, cfg, max_files_per_trigger=1, model=model)
+
+    assert read_accumulated(spark, out, "predictions").count() > 0
+    assert len(created) == 2  # one staging per micro-batch
+    assert [d for d in created if os.path.exists(d)] == []
+
+
 def test_stream_extract_matches_batch(spark, tmp_path):
     """readStream → extraction == batch extraction on the same files (the
     byte-identical invariant lifts to streaming)."""
